@@ -8,8 +8,8 @@ Each iteration is one batch job:
   3. fetch + decode + phash (`fetch.fetch_batch`)
   4. phash dedup: exact-duplicate images flagged against both the historical
      results and earlier rows of the same batch
-  5. append results + seen rows + new frontier edges; overwrite the merged
-     Bloom and the remaining frontier
+  5. append results + seen rows + new frontier edges; overwrite the advanced
+     seen sketch and the remaining frontier
   6. append per-partition lineage rows LAST — the lineage commit finalizes
      the iteration; resume replays from the last finalized iteration and
      ignores any newer uncommitted snapshots (exact resume).
@@ -23,7 +23,9 @@ snapshot commits and the "cache hit suppresses re-fetch" behavior
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,11 +35,9 @@ from nightcrawler_ds_pipeline_spark.crawl import politeness
 from nightcrawler_ds_pipeline_spark.crawl.fetch import fetch_batch
 from nightcrawler_ds_pipeline_spark.crawl.seen import (
     DEFAULT_NUM_PARTITIONS,
-    build_bloom_partitions,
-    build_cuckoo_partitions,
+    BloomSketch,
+    CuckooSketch,
     filter_unseen,
-    merge_bloom_tables,
-    update_cuckoo_tables,
 )
 from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
 from nightcrawler_ds_pipeline_spark.functions.urls import with_canonical
@@ -173,6 +173,23 @@ def committed_iter(catalog: SnapshotCatalog, spark: SparkSession) -> int:
     return int(row["m"]) if row["m"] is not None else -1
 
 
+def _expiring(seen_full, new_seen, it: int, ttl_iters: int | None) -> DataFrame | None:
+    """Seen rows becoming inactive at the NEXT iteration (seen_iter ==
+    it+1-ttl). Must include new_seen: at ttl_iters=1 this iteration's own
+    rows expire immediately (insert+delete nets to zero copies)."""
+    frames = [df.select("url_hash", "seen_iter") for df in (seen_full, new_seen) if df is not None]
+    if ttl_iters is None or not frames:
+        return None
+    all_seen = reduce(DataFrame.unionByName, frames)
+    return all_seen.filter(F.col("seen_iter") == it + 1 - ttl_iters)
+
+
+def _unpersist(*dfs: DataFrame | None) -> None:
+    for df in dfs:
+        if df is not None:
+            df.unpersist()
+
+
 def run_crawl(
     spark: SparkSession,
     catalog: SnapshotCatalog,
@@ -201,6 +218,11 @@ def run_crawl(
     # extra action inside the loop
     seen0 = catalog.read(spark, "seen", max_iter=start_iter - 1)
     seen_count = seen0.count() if seen0 is not None else 0
+    sk = (
+        BloomSketch(cfg.bloom_partitions)
+        if cfg.sketch == "bloom"
+        else CuckooSketch(cfg.bloom_partitions, cfg.cuckoo_buckets, cfg.ttl_iters)
+    )
 
     for it in range(start_iter, cfg.iterations):
         committed = it - 1
@@ -217,62 +239,33 @@ def run_crawl(
         if seen_full is not None and cfg.ttl_iters is not None:
             seen = seen_full.filter(F.col("seen_iter") > it - cfg.ttl_iters)
 
-        use_sketch = seen_count >= cfg.bloom_min_seen
-        sketch_table = "bloom" if cfg.sketch == "bloom" else "cuckoo"
-        sketch = (
-            catalog.read(spark, sketch_table, max_iter=committed)
-            if use_sketch
-            else None
-        )
-        # The probe-side sketches must OVER-approximate the active seen set
+        # The probe-side sketch must OVER-approximate the active seen set
         # (a "definitely not seen" verdict bypasses the exact anti-join),
         # so a stored sketch is usable only if it is both FRESH — written
         # at the same iteration as the newest seen snapshot; an
         # accrual-only or below-gate iteration commits lineage without a
-        # sketch write — and GEOMETRY-compatible (same modulus as this
-        # run's bloom_partitions; probing across moduli mis-places keys).
-        # Checked every iteration: the staleness check is manifest-only and
-        # the modulus check is one .first() on the small sketch table. On
-        # any mismatch the seen table is the source of truth: the Bloom
-        # rebuilds from the UNFILTERED set (it keeps TTL-expired history on
-        # purpose — it cannot delete), the cuckoo from the ACTIVE set (its
-        # whole point is pruning expiries).
-        sketch_cached = None
+        # sketch write — and VALID for this run: every key of sk.meta
+        # (modulus, and the cuckoo's maintenance TTL) equals the stored
+        # meta; a catalog written without a key rebuilds. Checked every
+        # iteration from the snapshot manifest alone (no Spark job); the
+        # in-row modulus checks of the probe and update stay as the safety
+        # net. On any mismatch the seen table is the source of truth.
+        use_sketch = seen_count >= cfg.bloom_min_seen
+        sketch = rebuilt = None
         if use_sketch and seen is not None:
-            rebuild = sketch is None or catalog.latest_iter(
-                sketch_table, max_iter=committed
-            ) < catalog.latest_iter("seen", max_iter=committed)
-            if not rebuild and cfg.sketch == "cuckoo":
-                # the cuckoo's stored content depends on the TTL it was
-                # maintained under: a resume with a LONGER (or no) TTL
-                # re-activates generations the old sketch already deleted —
-                # probing it would under-approximate the active set and
-                # silently re-crawl seen URLs. The maintenance TTL is
-                # persisted in the snapshot meta; any mismatch (including
-                # pre-upgrade catalogs without the key) rebuilds.
-                stored_ttl = catalog.latest_meta(
-                    sketch_table, max_iter=committed
-                ).get("ttl_iters", "__absent__")
-                rebuild = stored_ttl != cfg.ttl_iters
-            if not rebuild:
-                first = sketch.select("num_partitions").first()
-                rebuild = first is None or int(first[0]) != cfg.bloom_partitions
-            if rebuild:
-                if cfg.sketch == "bloom":
-                    sketch = build_bloom_partitions(
-                        seen_full, num_partitions=cfg.bloom_partitions
-                    )
-                else:
-                    sketch = build_cuckoo_partitions(
-                        seen,
-                        num_partitions=cfg.bloom_partitions,
-                        num_buckets=cfg.cuckoo_buckets,
-                    )
+            stored = catalog.latest_meta(sk.table, max_iter=committed)
+            fresh = (
+                catalog.latest_iter(sk.table, max_iter=committed)
+                >= catalog.latest_iter("seen", max_iter=committed)
+                and sk.meta.items() <= stored.items()
+            )
+            if fresh:
+                sketch = catalog.read(spark, sk.table, max_iter=committed)
+            else:
                 # cache: the rebuilt sketch (a full-seen-set applyInPandas
-                # pass) feeds BOTH the probe and the 5b merge/update write —
+                # pass) feeds BOTH the probe and the 5b advance write —
                 # uncached it would execute twice
-                sketch = sketch.cache()
-                sketch_cached = sketch
+                sketch = rebuilt = sk.build(seen_full, seen).cache()
 
         # 1. not-seen filter (sketch pre-pass via the map-side
         # co-partitioned probe — sketches never visit the driver; exact
@@ -280,12 +273,7 @@ def run_crawl(
         # which is itself cached — a second cache layer here was one extra
         # memory-write pass per iteration (r6).
         candidates = filter_unseen(
-            spark,
-            frontier,
-            seen,
-            sketch,
-            num_partitions=cfg.bloom_partitions,
-            sketch=cfg.sketch,
+            frontier, seen, sketch, num_partitions=cfg.bloom_partitions, sketch=cfg.sketch
         )
 
         # 2. robots gate ONCE (dequeue, remaining-frontier rewrite and
@@ -325,61 +313,54 @@ def run_crawl(
         batch = politeness.assign_global_seq(
             pre_batch, known_count=n_batch
         ).cache()
-        gated_hosts = gated.select("host", "crawl_delay_ms")
+        meta = {"iter": it}
+
+        # 5a. new seen rows = everything dequeued this iteration
+        new_seen = None
+        if n_batch:
+            new_seen = batch.select(
+                "url_hash", "canonical_url", F.lit(it).cast("int").alias("seen_iter")
+            )
+
+        # 5b. advanced sketch (overwrite snapshot) — only above the size
+        # gate; below it no sketch is maintained, and the first above-gate
+        # iteration rebuilds it via the freshness check above. The cuckoo
+        # also deletes the rows expiring at the NEXT iteration, so the
+        # stored sketch matches the active set the next probe runs against.
+        # Accrual iterations advance too: each seen generation is deleted
+        # from the cuckoo exactly once, at exactly its expiry iteration (a
+        # skipped deletion lingers forever — catching up later with <= would
+        # double-delete keys re-seen since). When advance changes nothing
+        # only a rebuild is persisted, so the next iteration need not
+        # re-derive it; rewriting an unchanged multi-MB snapshot every
+        # token-starved iteration would only grow the manifest.
+        next_sketch = None
+        if use_sketch:
+            expiring = _expiring(seen_full, new_seen, it, cfg.ttl_iters)
+            next_sketch = sk.advance(sketch, new_seen, expiring)
+            if next_sketch is None:
+                next_sketch = rebuilt
+        # the validity meta travels with the snapshot (freshness check above)
+        sk_meta = {**meta, **sk.meta}
+
+        # 5c. token-bucket accounting for the next iteration (an
+        # accrual-only iteration commits it too)
+        new_buckets = politeness.next_bucket_state(
+            gated.select("host", "crawl_delay_ms"), batch, bucket_state,
+            window_ms=cfg.window_ms,
+        )
+
         if n_batch == 0:
             # nothing dequeuable. If the gated frontier is empty the crawl
             # is done; otherwise slow hosts are merely out of tokens — commit
             # an accrual-only iteration so their buckets refill (without
             # this, hosts with crawl_delay > window starve forever).
             if gated.limit(1).count() == 0:
-                batch.unpersist()
-                pre_batch.unpersist()
-                gated.unpersist()
-                if sketch_cached is not None:
-                    sketch_cached.unpersist()
+                _unpersist(batch, pre_batch, gated, rebuilt)
                 break
-            meta = {"iter": it}
-            accrued = politeness.next_bucket_state(
-                gated_hosts, batch, bucket_state, window_ms=cfg.window_ms
-            )
-            catalog.write(accrued, "politeness", mode="overwrite", meta=meta)
-            # sketch maintenance cannot skip an accrual iteration: each
-            # seen generation is deleted from the cuckoo exactly once, at
-            # exactly its expiry iteration (a skipped deletion lingers
-            # forever — and catching up later with <= would double-delete
-            # keys re-seen since). Also persists any freshness/geometry
-            # rebuild done at the top of the loop so consecutive accrual
-            # iterations don't re-derive it.
-            if use_sketch and sketch is not None:
-                sk_meta = {"iter": it}
-                if cfg.sketch == "cuckoo":
-                    sk_meta["ttl_iters"] = cfg.ttl_iters
-                    applied_deletes = False
-                    if seen_full is not None and cfg.ttl_iters is not None:
-                        expiring = seen_full.filter(
-                            F.col("seen_iter") == it + 1 - cfg.ttl_iters
-                        )
-                        sketch = update_cuckoo_tables(
-                            sketch,
-                            None,
-                            expiring,
-                            num_partitions=cfg.bloom_partitions,
-                            num_buckets=cfg.cuckoo_buckets,
-                        )
-                        applied_deletes = True
-                    # with no TTL there are no deletions: rewriting the
-                    # unchanged multi-MB snapshot every token-starved
-                    # iteration only grows the manifest — skip unless a
-                    # rebuild happened this iteration (mirrors the bloom
-                    # branch's sketch_cached guard)
-                    if applied_deletes or sketch_cached is not None:
-                        catalog.write(
-                            sketch, sketch_table, mode="overwrite", meta=sk_meta
-                        )
-                elif sketch_cached is not None:
-                    catalog.write(
-                        sketch, sketch_table, mode="overwrite", meta=sk_meta
-                    )
+            catalog.write(new_buckets, "politeness", mode="overwrite", meta=meta)
+            if next_sketch is not None:
+                catalog.write(next_sketch, sk.table, mode="overwrite", meta=sk_meta)
             empty_lineage = spark.createDataFrame(
                 [(it, -1, "empty", 0, 0, cfg.run_ts)], schema=schemas.LINEAGE
             )
@@ -388,11 +369,7 @@ def run_crawl(
                 {"iter": it, "dequeued": 0, "results": 0,
                  "new_unique_images": 0, "errors": 0}
             )
-            batch.unpersist()
-            pre_batch.unpersist()
-            gated.unpersist()
-            if sketch_cached is not None:
-                sketch_cached.unpersist()
+            _unpersist(batch, pre_batch, gated, rebuilt)
             continue
 
         # 3. fetch + decode + phash (n_batch proves the broadcast-size gate)
@@ -428,55 +405,7 @@ def run_crawl(
             F.col("is_phash_dup"),
         )
 
-        # 5a. new seen rows = everything dequeued this iteration
-        new_seen = batch.select(
-            "url_hash", "canonical_url", F.lit(it).cast("int").alias("seen_iter")
-        )
-
-        # 5b. merged sketch (overwrite snapshot) — only above the size
-        # gate; below it no sketches are maintained at all, and the first
-        # above-gate iteration rebuilds them from the seen table via the
-        # freshness check at the top of the loop. Bloom: OR-merge the new
-        # keys in. Cuckoo: insert the new keys AND delete the rows expiring
-        # at the NEXT iteration (the oldest still-active generation), so
-        # the stored sketch matches the active set the next probe runs
-        # against.
-        if use_sketch:
-            if cfg.sketch == "bloom":
-                new_bloom = build_bloom_partitions(
-                    new_seen, num_partitions=cfg.bloom_partitions
-                )
-                merged_sketch = (
-                    merge_bloom_tables(sketch, new_bloom)
-                    if sketch is not None
-                    else new_bloom
-                )
-            else:
-                # deletions = the generation becoming inactive at the NEXT
-                # iteration (seen_iter == it+1-ttl). Must include new_seen:
-                # at ttl_iters=1 this iteration's own rows expire
-                # immediately (insert+delete nets to zero copies).
-                expiring = None
-                if cfg.ttl_iters is not None:
-                    all_seen = (
-                        new_seen
-                        if seen_full is None
-                        else seen_full.select(*new_seen.columns).unionByName(
-                            new_seen
-                        )
-                    )
-                    expiring = all_seen.filter(
-                        F.col("seen_iter") == it + 1 - cfg.ttl_iters
-                    )
-                merged_sketch = update_cuckoo_tables(
-                    sketch,
-                    new_seen,
-                    expiring,
-                    num_partitions=cfg.bloom_partitions,
-                    num_buckets=cfg.cuckoo_buckets,
-                )
-
-        # 5c. frontier edges from outlinks; remaining = gated - dequeued + new
+        # 5d. frontier edges from outlinks; remaining = gated - dequeued + new
         remaining = gated.select(*FRONTIER_COLS).join(
             batch.select("url_hash"), "url_hash", "left_anti"
         )
@@ -523,11 +452,6 @@ def run_crawl(
                 cfg.frontier_shuffle_partitions, "host"
             )
 
-        # 5d. token-bucket accounting for the next iteration
-        new_buckets = politeness.next_bucket_state(
-            gated_hosts, batch, bucket_state, window_ms=cfg.window_ms
-        )
-
         # 6. commit snapshots — lineage strictly last (the commit point).
         # The five non-lineage snapshots are mutually independent once the
         # shared caches are materialized, and each is a small job whose
@@ -540,10 +464,7 @@ def run_crawl(
         # other's task tails). Crash semantics are unchanged: any subset of
         # these snapshots without the lineage finalizer is rolled back by
         # rollback_above on resume, in whatever order it was written.
-        meta = {"iter": it}
         batch.count()  # materialize the cached dequeue before fan-out
-
-        from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=4) as pool:
             # EARLY writes — depend only on the just-materialized batch /
@@ -558,16 +479,10 @@ def run_crawl(
                     catalog.write, new_seen, "seen", mode="append", meta=meta
                 ),
             ]
-            if use_sketch:
-                sk_meta = dict(meta)
-                if cfg.sketch == "cuckoo":
-                    # the maintenance TTL travels with the snapshot: a
-                    # resume under a different ttl_iters must rebuild (see
-                    # the freshness check at the top of the loop)
-                    sk_meta["ttl_iters"] = cfg.ttl_iters
+            if next_sketch is not None:
                 futures.append(
                     pool.submit(
-                        catalog.write, merged_sketch, sketch_table,
+                        catalog.write, next_sketch, sk.table,
                         mode="overwrite", meta=sk_meta,
                     )
                 )
@@ -645,11 +560,6 @@ def run_crawl(
                 "errors": n_errors,
             }
         )
-        batch.unpersist()
-        pre_batch.unpersist()
-        deduped.unpersist()
-        gated.unpersist()
-        if sketch_cached is not None:
-            sketch_cached.unpersist()
+        _unpersist(batch, pre_batch, deduped, gated, rebuilt)
 
     return {"start_iter": start_iter, "iterations": summary}

@@ -9,8 +9,9 @@ per-host budget generalizes that to a cluster.
 Mechanics:
 - robots gate: broadcast join frontier ⋈ robots on host; drop URLs whose
   path starts with any disallow prefix (JVM-side ``exists``/``startswith``).
-- budget: tokens(host) = floor(window_ms / crawl_delay_ms) clamped to
-  [1, max_per_host]; delay 0 → max_per_host.
+- budget: floor(available / crawl_delay_ms) clamped to [0, max_per_host],
+  delay ≤ 0 → max_per_host, from the accrued token level
+  (`token_bucket_cols`, the one definition of the bucket arithmetic).
 - dequeue: top-budget URLs per host by (priority desc, url_hash asc) — a
   deterministic total order (SURVEY.md §7 hard-point a). Implemented as
   TWO-PHASE top-K so one hot host can't serialize a shuffle partition
@@ -51,16 +52,31 @@ def robots_filter(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     )
 
 
-def host_budget_col(window_ms: int, max_per_host: int):
-    """tokens = clamp(floor(window_ms / crawl_delay_ms), 0, max_per_host).
+def token_bucket_cols(tokens_ms, window_ms: int, max_per_host: int = DEFAULT_MAX_PER_HOST):
+    """The token-bucket arithmetic as (available, budget) Columns over a
+    ``crawl_delay_ms`` column — the Column twin of the scalar
+    ``streaming.politeness_stream.compute_budget``.
 
-    Clamp floor is 0 (not 1): a host with crawl_delay_ms > window_ms gets no
-    fetch this window and accrues tokens instead — matching the token-bucket
-    path and the parity oracle exactly."""
-    raw = F.when(F.col("crawl_delay_ms") <= 0, F.lit(max_per_host)).otherwise(
-        F.floor(F.lit(window_ms) / F.col("crawl_delay_ms"))
+    available = min(2·window, tokens + window): unspent time rolls over,
+    capped at two windows (null tokens = a host with no stored level).
+    budget = floor(available / crawl_delay_ms) clamped to [0, max_per_host];
+    delay ≤ 0 → max_per_host. The clamp floor is 0 (not 1): a host with
+    crawl_delay_ms > available gets no fetch this window and accrues tokens
+    instead — matching the parity oracle exactly."""
+    available = F.least(
+        F.lit(2 * window_ms), F.coalesce(tokens_ms, F.lit(0)) + F.lit(window_ms)
     )
-    return F.greatest(F.lit(0), F.least(F.lit(max_per_host), raw)).cast("int")
+    raw = F.when(F.col("crawl_delay_ms") <= 0, F.lit(max_per_host)).otherwise(
+        F.floor(available / F.col("crawl_delay_ms"))
+    )
+    budget = F.greatest(F.lit(0), F.least(F.lit(max_per_host), raw)).cast("int")
+    return available, budget
+
+
+def host_budget_col(window_ms: int, max_per_host: int):
+    """tokens = clamp(floor(window_ms / crawl_delay_ms), 0, max_per_host):
+    the budget of a host with no accrued tokens."""
+    return token_bucket_cols(F.lit(0), window_ms, max_per_host)[1]
 
 
 def dequeue(
@@ -106,17 +122,8 @@ def dequeue_gated(
     if bucket_state is not None:
         state = bucket_state.select("host", "tokens_ms")
         gated = gated.join(F.broadcast(state), "host", "left")
-        available = F.least(
-            F.lit(2 * window_ms),
-            F.coalesce(F.col("tokens_ms"), F.lit(0)) + F.lit(window_ms),
-        )
-        raw = F.when(F.col("crawl_delay_ms") <= 0, F.lit(max_per_host)).otherwise(
-            F.floor(available / F.col("crawl_delay_ms"))
-        )
-        gated = gated.withColumn(
-            "host_budget",
-            F.greatest(F.lit(0), F.least(F.lit(max_per_host), raw)).cast("int"),
-        ).drop("tokens_ms")
+        _, budget = token_bucket_cols(F.col("tokens_ms"), window_ms, max_per_host)
+        gated = gated.withColumn("host_budget", budget).drop("tokens_ms")
     else:
         gated = gated.withColumn(
             "host_budget", host_budget_col(window_ms, max_per_host)
@@ -234,9 +241,7 @@ def next_bucket_state(
         hosts = hosts.join(bucket_state.select("host", "tokens_ms"), "host", "left")
     else:
         hosts = hosts.withColumn("tokens_ms", F.lit(None).cast("long"))
-    available = F.least(
-        F.lit(2 * window_ms), F.coalesce(F.col("tokens_ms"), F.lit(0)) + F.lit(window_ms)
-    )
+    available, _ = token_bucket_cols(F.col("tokens_ms"), window_ms)
     new_state = (
         hosts.join(spent, "host", "left")
         .withColumn(

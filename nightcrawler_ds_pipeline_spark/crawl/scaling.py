@@ -198,10 +198,7 @@ def _batch_stage(spark: SparkSession, input_dir: str, max_per_host: int):
     seen = spark.read.parquet(f"{input_dir}/seen.parquet")
     bloom = spark.read.parquet(f"{input_dir}/bloom.parquet")
     candidates = filter_unseen(
-        spark,
-        frontier.select("url_hash", "host", "priority"),
-        seen,
-        bloom,
+        frontier.select("url_hash", "host", "priority"), seen, bloom
     )
     # salted per-host top-K (politeness dequeue shape; budget unbounded so
     # the batch is the full unseen set — steady-state max load)
@@ -315,9 +312,7 @@ def profile_scaling_stages(
     prof = {}
     prof["scan_frontier"] = _noop(frontier.select("url_hash", "host", "priority"))
     prof["probe_antijoin"] = _noop(
-        filter_unseen(
-            spark, frontier.select("url_hash", "host", "priority"), seen, bloom
-        )
+        filter_unseen(frontier.select("url_hash", "host", "priority"), seen, bloom)
     )
     batch = _batch_stage(spark, input_dir, max_per_host)
     prof["dequeue"] = _noop(batch)

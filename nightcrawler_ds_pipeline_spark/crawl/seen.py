@@ -17,25 +17,27 @@ sketch with k hashes derived from the already-uniform xxhash64 key via
 splitmix64 double hashing (public-domain construction). Sketches OR-merge
 across iterations and persist as one binary row per partition.
 
-Probe strategies (``filter_unseen(probe=...)``):
-
-- ``copartition`` (default, the 10^10 path): candidates' keys are shuffled
-  by pmod(key, P) and cogrouped with their OWN partition's sketch row via
-  ``applyInPandas`` — each task touches exactly one sketch, **no sketch ever
-  visits the driver** (SCALE.md §2: at the design point the sketch table is
-  ~12.5 GB — collect+broadcast would ship it to the driver and then to every
-  executor).
-- ``broadcast`` (micro-batch/diagnostic path): driver-collects the sketch
-  table into a broadcast pandas UDF. Only sane while ΣP·m bits is a few MB.
+Both sketches — this Bloom and the deletion-capable cuckoo below — share
+one probe: candidates' keys are shuffled by pmod(key, P) and cogrouped with
+their OWN partition's sketch row via ``applyInPandas``; each task touches
+exactly one sketch, **no sketch ever visits the driver** (SCALE.md §2: at
+the design point the sketch table is ~12.5 GB — collect+broadcast would ship
+it to the driver and then to every executor). Only the per-sketch
+membership test differs. ``BloomSketch`` / ``CuckooSketch`` are the crawl
+loop's handle on each: catalog table, validity meta, build and advance.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from nightcrawler_ds_pipeline_spark.crawl.cuckoo import CuckooFilter
 
 # P must stay ≫ max(cores, shuffle partitions): the probe cogroups by
 # pmod(key, P), and with P ≈ shuffle-partition count the balls-in-bins hash
@@ -85,6 +87,51 @@ def _bit_positions(hashes: np.ndarray, num_bits: int, num_hashes: int) -> np.nda
     return pos.astype(np.int64)
 
 
+def _pid(key: str, num_partitions: int):
+    return F.pmod(F.col(key), F.lit(num_partitions)).cast("int")
+
+
+def _check_modulus(stored: int, expected: int, what: str) -> None:
+    # a modulus mismatch silently places keys in the WRONG sketch
+    # → sketch false negatives → duplicate crawls; fail loudly
+    if stored != expected:
+        raise ValueError(
+            f"{what} modulus {expected} != stored sketch modulus {stored}: "
+            "the sketch was built with a different bloom_partitions — "
+            "rebuild it from the seen table"
+        )
+
+
+def _suspect_keys(
+    candidates: DataFrame, sketch_df: DataFrame, contains, key: str, num_partitions: int, what: str
+) -> DataFrame:
+    """Map-side co-partitioned probe → the sketch-POSITIVE key set.
+
+    Candidates' keys shuffle by pmod(key, P); each cogroup task probes its
+    rows against its own partition's sketch row (one 128 KiB–16 MiB binary
+    blob per task, read executor-side) with ``contains(sketch_row, keys)``.
+    The sketch table never crosses the driver, so the probe scales with P,
+    not with Σ sketch bytes.
+    """
+    out_schema = T.StructType([T.StructField(key, T.LongType(), False)])
+
+    def probe(cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
+        # no sketch row for this partition → no key of it was ever inserted
+        if cand_pdf.empty or sk_pdf.empty:
+            return pd.DataFrame({key: pd.Series([], dtype="int64")})
+        row = sk_pdf.iloc[0]
+        _check_modulus(int(row["num_partitions"]), num_partitions, what)
+        keys = cand_pdf[key].to_numpy(dtype=np.int64)
+        return pd.DataFrame({key: keys[contains(row, keys)]})
+
+    keyed = candidates.select(key).withColumn("__pid", _pid(key, num_partitions))
+    return (
+        keyed.groupBy("__pid")
+        .cogroup(sketch_df.groupBy("partition_id"))
+        .applyInPandas(probe, schema=out_schema)
+    )
+
+
 def build_bloom_partitions(
     df: DataFrame,
     key: str = "url_hash",
@@ -111,7 +158,7 @@ def build_bloom_partitions(
             }
         )
 
-    keyed = df.select(key).withColumn("__pid", F.pmod(F.col(key), F.lit(num_partitions)).cast("int"))
+    keyed = df.select(key).withColumn("__pid", _pid(key, num_partitions))
     return keyed.groupBy("__pid").applyInPandas(build, schema=BLOOM_SCHEMA)
 
 
@@ -155,174 +202,57 @@ def merge_bloom_tables(a: DataFrame, b: DataFrame) -> DataFrame:
     return both.groupBy("partition_id").applyInPandas(merge, schema=BLOOM_SCHEMA)
 
 
+def _bloom_contains(row: pd.Series, keys: np.ndarray) -> np.ndarray:
+    bits = np.frombuffer(row["bitset"], dtype=np.uint8)
+    pos = _bit_positions(keys, int(row["num_bits"]), int(row["num_hashes"]))
+    return ((bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0).all(axis=1)
+
+
 def bloom_suspect_keys(
     candidates: DataFrame,
     bloom_df: DataFrame,
     key: str = "url_hash",
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
 ) -> DataFrame:
-    """Map-side co-partitioned Bloom probe → the Bloom-POSITIVE key set.
-
-    Candidates' keys shuffle by pmod(key, P); each cogroup task probes its
-    rows against its own partition's sketch row (one 128 KiB–16 MiB binary
-    blob per task, read executor-side). The sketch table never crosses the
-    driver, so the probe scales with P, not with Σ sketch bytes.
-
-    Returns a (key) DataFrame of maybe-seen keys — i.e. true hits + Bloom
-    false positives; never misses a truly-seen key (no false negatives).
-    """
-    out_schema = T.StructType([T.StructField(key, T.LongType(), False)])
-
-    def probe(cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
-        # no sketch row for this partition → no key of it was ever inserted
-        if cand_pdf.empty or sk_pdf.empty:
-            return pd.DataFrame({key: pd.Series([], dtype="int64")})
-        stored_p = int(sk_pdf["num_partitions"].iloc[0])
-        if stored_p != num_partitions:
-            # a modulus mismatch silently places keys in the WRONG sketch
-            # → Bloom false negatives → duplicate crawls; fail loudly
-            raise ValueError(
-                f"Bloom probe modulus {num_partitions} != stored sketch "
-                f"modulus {stored_p}: the seen-set Bloom was built with a "
-                "different bloom_partitions — rebuild it from the seen table"
-            )
-        bits = np.frombuffer(sk_pdf["bitset"].iloc[0], dtype=np.uint8)
-        num_bits = int(sk_pdf["num_bits"].iloc[0])
-        num_hashes = int(sk_pdf["num_hashes"].iloc[0])
-        keys = cand_pdf[key].to_numpy(dtype=np.int64)
-        pos = _bit_positions(keys, num_bits, num_hashes)
-        hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-        return pd.DataFrame({key: keys[hit.all(axis=1)]})
-
-    keyed = candidates.select(key).withColumn(
-        "__pid", F.pmod(F.col(key), F.lit(num_partitions)).cast("int")
+    """Co-partitioned Bloom probe → a (key) DataFrame of maybe-seen keys —
+    true hits + Bloom false positives; never misses a truly-seen key (no
+    false negatives)."""
+    return _suspect_keys(
+        candidates, bloom_df, _bloom_contains, key, num_partitions, "Bloom probe"
     )
-    sketches = bloom_df.select(
-        "partition_id", "num_partitions", "num_bits", "num_hashes", "bitset"
-    )
-    return (
-        keyed.groupBy("__pid")
-        .cogroup(sketches.groupBy("partition_id"))
-        .applyInPandas(probe, schema=out_schema)
-    )
-
-
-def bloom_maybe_seen_udf(
-    spark: SparkSession,
-    bloom_df: DataFrame | None,
-    num_partitions: int = DEFAULT_NUM_PARTITIONS,
-):
-    """Broadcast the Bloom table → Arrow-batched membership pandas UDF.
-
-    The MICRO-BATCH / diagnostic probe: driver-collects the sketch table,
-    which is only sane while it is a few MB total (tests, tiny frontiers).
-    Production `filter_unseen` defaults to the co-partitioned probe above.
-
-    Returns None when no Bloom exists yet (first iteration) — caller skips
-    the pre-filter and goes straight to the exact anti-join.
-    """
-    if bloom_df is None:
-        return None
-    rows = bloom_df.collect()
-    if not rows:
-        return None
-    bad = {int(r["num_partitions"]) for r in rows} - {num_partitions}
-    if bad:
-        raise ValueError(
-            f"Bloom probe modulus {num_partitions} != stored sketch modulus "
-            f"{sorted(bad)}: rebuild the Bloom from the seen table"
-        )
-    parts = {
-        int(r["partition_id"]): (
-            np.frombuffer(r["bitset"], dtype=np.uint8),
-            int(r["num_bits"]),
-            int(r["num_hashes"]),
-        )
-        for r in rows
-    }
-    bc = spark.sparkContext.broadcast(parts)
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(url_hash: pd.Series) -> pd.Series:
-        keys = url_hash.to_numpy(dtype=np.int64)
-        pids = np.mod(keys, num_partitions)  # == Spark pmod for positive P
-        out = np.zeros(len(keys), dtype=bool)
-        table = bc.value
-        for pid in np.unique(pids):
-            entry = table.get(int(pid))
-            if entry is None:
-                continue
-            bits, num_bits, num_hashes = entry
-            idx = np.where(pids == pid)[0]
-            pos = _bit_positions(keys[idx], num_bits, num_hashes)
-            hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-            out[idx] = hit.all(axis=1)
-        return pd.Series(out)
-
-    return maybe_seen
 
 
 def filter_unseen(
-    spark: SparkSession,
     candidates: DataFrame,
     seen_df: DataFrame | None,
-    bloom_df: DataFrame | None,
+    sketch_df: DataFrame | None,
     key: str = "url_hash",
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
-    probe: str = "copartition",
     sketch: str = "bloom",
 ) -> DataFrame:
-    """Exact not-seen filter with Bloom pre-pass (J2, the workhorse join).
+    """Exact not-seen filter with a sketch pre-pass (J2, the workhorse join).
 
-    The Bloom never decides: both probe strategies end in an exact join
-    against the seen table, the Bloom only shrinks that join's probe side to
-    (true hits + ε false positives). Without a Bloom (or without a seen
+    The sketch never decides: the result always comes from an exact join
+    against the seen table, the sketch only shrinks that join's probe side
+    to (true hits + ε false positives). Without a sketch (or without a seen
     table) this degrades gracefully to the exact path alone.
 
-    copartition (default): suspects = bloom_suspect_keys (map-side cogroup,
-    no driver collect); confirmed-seen = suspects ⋉ seen; result =
-    candidates ▷ confirmed-seen. Because the Bloom has no false negatives,
-    confirmed-seen ≡ candidates ∩ seen, so the result is exactly
-    candidates \\ seen. confirmed-seen is small (≈ the re-seen fraction of
-    the batch), so AQE turns the final anti-join into a broadcast — the
-    full-width candidate rows are never shuffled.
-
-    broadcast: the legacy driver-collect pandas-UDF pre-filter — fine for
-    tests and micro-batches, unusable once the sketch table outgrows RAM.
+    suspects = the co-partitioned probe of ``sketch`` (map-side cogroup, no
+    driver collect); confirmed-seen = suspects ⋉ seen; result = candidates
+    ▷ confirmed-seen. Because neither sketch has false negatives,
+    confirmed-seen ≡ candidates ∩ seen, so the result is exactly candidates
+    \\ seen. confirmed-seen is small (≈ the re-seen fraction of the batch),
+    so AQE turns the final anti-join into a broadcast — the full-width
+    candidate rows are never shuffled.
     """
-    if sketch not in ("bloom", "cuckoo"):
+    if sketch not in _SUSPECT_KEYS:
         raise ValueError(f"filter_unseen: unknown sketch {sketch!r}")
     if seen_df is None:
         return candidates
     seen_keys = seen_df.select(key)
-    if bloom_df is None:
+    if sketch_df is None:
         return candidates.join(seen_keys, key, "left_anti")
-
-    if sketch == "cuckoo":
-        if probe != "copartition":
-            # the diagnostic broadcast probe exists only for the Bloom;
-            # silently falling back would hide a misconfiguration
-            raise ValueError(
-                f"filter_unseen: probe={probe!r} is not supported with "
-                "sketch='cuckoo' (only 'copartition')"
-            )
-        # cuckoo sketches share the probe contract (false positives only),
-        # so the same suspects → confirm → anti-join pipeline applies
-        suspect_keys = cuckoo_suspect_keys(candidates, bloom_df, key, num_partitions)
-        confirmed_seen = suspect_keys.join(seen_keys, key, "left_semi")
-        return candidates.join(confirmed_seen, key, "left_anti")
-
-    if probe == "broadcast":
-        maybe = bloom_maybe_seen_udf(spark, bloom_df, num_partitions)
-        if maybe is None:
-            return candidates.join(seen_keys, key, "left_anti")
-        tagged = candidates.withColumn("__maybe_seen", maybe(F.col(key)))
-        fresh = tagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-        suspects = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-        confirmed_new = suspects.join(seen_keys, key, "left_anti")
-        return fresh.unionByName(confirmed_new)
-
-    suspect_keys = bloom_suspect_keys(candidates, bloom_df, key, num_partitions)
+    suspect_keys = _SUSPECT_KEYS[sketch](candidates, sketch_df, key, num_partitions)
     confirmed_seen = suspect_keys.join(seen_keys, key, "left_semi")
     return candidates.join(confirmed_seen, key, "left_anti")
 
@@ -366,7 +296,6 @@ def build_cuckoo_partitions(
     num_buckets: int = DEFAULT_CUCKOO_BUCKETS,
 ) -> DataFrame:
     """One cuckoo sketch per pmod(key, P) partition via applyInPandas."""
-    from nightcrawler_ds_pipeline_spark.crawl.cuckoo import CuckooFilter
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(pdf["__pid"].iloc[0])
@@ -379,9 +308,7 @@ def build_cuckoo_partitions(
                 )
         return _cuckoo_row(pid, num_partitions, cf)
 
-    keyed = df.select(key).withColumn(
-        "__pid", F.pmod(F.col(key), F.lit(num_partitions)).cast("int")
-    )
+    keyed = df.select(key).withColumn("__pid", _pid(key, num_partitions))
     return keyed.groupBy("__pid").applyInPandas(build, schema=CUCKOO_SCHEMA)
 
 
@@ -396,15 +323,12 @@ def update_cuckoo_tables(
     """Apply (insert additions, delete deletions) per partition — cogrouped
     so no sketch visits the driver. Deleting a key with no stored copy is a
     no-op (expiry of a row whose sketch predates it, or a rebuilt sketch)."""
-    from nightcrawler_ds_pipeline_spark.crawl.cuckoo import CuckooFilter
 
     def ops_frame(df: DataFrame | None, op: int) -> DataFrame | None:
         if df is None:
             return None
         return df.select(
-            F.col(key),
-            F.lit(op).alias("__op"),
-            F.pmod(F.col(key), F.lit(num_partitions)).cast("int").alias("__pid"),
+            F.col(key), F.lit(op).alias("__op"), _pid(key, num_partitions).alias("__pid")
         )
 
     adds = ops_frame(additions, 1)
@@ -415,15 +339,10 @@ def update_cuckoo_tables(
 
     def update(ops_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         if not sk_pdf.empty:
-            stored_p = int(sk_pdf["num_partitions"].iloc[0])
-            if stored_p != num_partitions:
-                raise ValueError(
-                    f"cuckoo update modulus {num_partitions} != stored "
-                    f"{stored_p}: rebuild the sketch from the seen table"
-                )
-            nb = int(sk_pdf["num_buckets"].iloc[0])
-            cf = CuckooFilter.from_bytes(sk_pdf["table"].iloc[0], nb)
-            pid = int(sk_pdf["partition_id"].iloc[0])
+            row = sk_pdf.iloc[0]
+            _check_modulus(int(row["num_partitions"]), num_partitions, "cuckoo update")
+            cf = CuckooFilter.from_bytes(row["table"], int(row["num_buckets"]))
+            pid = int(row["partition_id"])
         else:
             cf = CuckooFilter(num_buckets=num_buckets)
             pid = int(ops_pdf["__pid"].iloc[0])
@@ -452,39 +371,89 @@ def update_cuckoo_tables(
     )
 
 
+def _cuckoo_contains(row: pd.Series, keys: np.ndarray) -> np.ndarray:
+    return CuckooFilter.from_bytes(row["table"], int(row["num_buckets"])).contains(keys)
+
+
 def cuckoo_suspect_keys(
     candidates: DataFrame,
     cuckoo_df: DataFrame,
     key: str = "url_hash",
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
 ) -> DataFrame:
-    """Map-side co-partitioned cuckoo probe → the maybe-seen key set (same
-    contract as bloom_suspect_keys: false positives possible, never false
-    negatives for keys whose inserts were applied)."""
-    from nightcrawler_ds_pipeline_spark.crawl.cuckoo import CuckooFilter
-
-    out_schema = T.StructType([T.StructField(key, T.LongType(), False)])
-
-    def probe(cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty or sk_pdf.empty:
-            return pd.DataFrame({key: pd.Series([], dtype="int64")})
-        stored_p = int(sk_pdf["num_partitions"].iloc[0])
-        if stored_p != num_partitions:
-            raise ValueError(
-                f"cuckoo probe modulus {num_partitions} != stored sketch "
-                f"modulus {stored_p}: rebuild it from the seen table"
-            )
-        nb = int(sk_pdf["num_buckets"].iloc[0])
-        cf = CuckooFilter.from_bytes(sk_pdf["table"].iloc[0], nb)
-        keys = cand_pdf[key].to_numpy(dtype=np.int64)
-        return pd.DataFrame({key: keys[cf.contains(keys)]})
-
-    keyed = candidates.select(key).withColumn(
-        "__pid", F.pmod(F.col(key), F.lit(num_partitions)).cast("int")
+    """Co-partitioned cuckoo probe → the maybe-seen key set (same contract
+    as bloom_suspect_keys: false positives possible, never false negatives
+    for keys whose inserts were applied)."""
+    return _suspect_keys(
+        candidates, cuckoo_df, _cuckoo_contains, key, num_partitions, "cuckoo probe"
     )
-    sketches = cuckoo_df.select("partition_id", "num_partitions", "num_buckets", "table")
-    return (
-        keyed.groupBy("__pid")
-        .cogroup(sketches.groupBy("partition_id"))
-        .applyInPandas(probe, schema=out_schema)
-    )
+
+
+_SUSPECT_KEYS = {"bloom": bloom_suspect_keys, "cuckoo": cuckoo_suspect_keys}
+
+
+# --- the crawl loop's handle on each sketch ----------------------------------
+# A stored sketch is valid for a run only while every key of ``meta``
+# equals the meta it was written with (the loop checks this from the
+# snapshot manifest alone — no Spark job). ``build`` derives the sketch from
+# the seen table; ``advance`` folds one iteration's new and expiring seen
+# rows in, returning None when that leaves the sketch unchanged.
+
+
+@dataclass(frozen=True)
+class BloomSketch:
+    """OR-merge Bloom. It cannot delete, so it is built from the FULL seen
+    history and keeps TTL-expired keys on purpose — they only cost false
+    positives, and the exact anti-join decides."""
+
+    num_partitions: int = DEFAULT_NUM_PARTITIONS
+    table = "bloom"
+
+    @property
+    def meta(self) -> dict:
+        return {"num_partitions": self.num_partitions}
+
+    def build(self, seen_full: DataFrame, active: DataFrame) -> DataFrame:
+        return build_bloom_partitions(seen_full, num_partitions=self.num_partitions)
+
+    def advance(self, sketch, new, expiring) -> DataFrame | None:
+        if new is None:
+            return None
+        added = build_bloom_partitions(new, num_partitions=self.num_partitions)
+        return added if sketch is None else merge_bloom_tables(sketch, added)
+
+
+@dataclass(frozen=True)
+class CuckooSketch:
+    """Multiset insert/delete cuckoo. It tracks the ACTIVE seen set: built
+    from the TTL-filtered rows, each seen generation deleted exactly once,
+    at exactly its expiry iteration."""
+
+    num_partitions: int = DEFAULT_NUM_PARTITIONS
+    num_buckets: int = DEFAULT_CUCKOO_BUCKETS
+    ttl_iters: int | None = None
+    table = "cuckoo"
+
+    @property
+    def meta(self) -> dict:
+        # the stored content depends on the TTL it was maintained under: a
+        # resume with a LONGER (or no) TTL re-activates generations the old
+        # sketch already deleted — probing it would under-approximate the
+        # active set and silently re-crawl seen URLs
+        return {"num_partitions": self.num_partitions, "ttl_iters": self.ttl_iters}
+
+    def build(self, seen_full: DataFrame, active: DataFrame) -> DataFrame:
+        return build_cuckoo_partitions(
+            active, num_partitions=self.num_partitions, num_buckets=self.num_buckets
+        )
+
+    def advance(self, sketch, new, expiring) -> DataFrame | None:
+        if new is None and expiring is None:
+            return None
+        return update_cuckoo_tables(
+            sketch,
+            new,
+            expiring,
+            num_partitions=self.num_partitions,
+            num_buckets=self.num_buckets,
+        )

@@ -65,12 +65,18 @@ LOCAL_EDGES_MAX = 4_000_000
 
 # Byte ceiling for the collected edge frame when ids are STRINGS (URLs,
 # image ids). The row-count gate's "≈64 MB" arithmetic assumes fixed-width
-# int64 ids; a string cell costs its characters PLUS ~56 B of Python/pandas
+# int64 ids; a string cell costs its UTF-8 bytes PLUS ~56 B of Python/pandas
 # object overhead, so a 4M-edge URL graph (~80-char ids) is >1 GB of driver
-# memory. The estimate (total chars + 2×56 B per edge) comes from the same
-# aggregate that fingerprints the edge set — no extra job — and graphs over
-# the ceiling run the distributed fixpoint instead. Integral ids are
-# bounded by LOCAL_EDGES_MAX alone.
+# memory. The estimate (total id bytes + 2×56 B per edge) comes from the
+# same aggregate that fingerprints the edge set — no extra job — and graphs
+# over the ceiling run the distributed fixpoint instead. It counts bytes
+# (octet_length), not characters: a non-ASCII id costs up to 4 B per char.
+# Integral ids are bounded by LOCAL_EDGES_MAX alone.
+#
+# The ceiling bounds the collected FRAME, not the driver's peak: while
+# `_local_components` runs, the Arrow batches, the pandas object columns,
+# their concatenation and the factorized codes are alive together, so peak
+# driver memory is about 1.5-2× the estimate (≈0.75-1 GB at the default).
 LOCAL_EDGE_BYTES_MAX = 512 * 1024 * 1024
 _STRING_CELL_OVERHEAD = 56
 
@@ -130,26 +136,27 @@ def _local_components(pdf) -> "pandas.DataFrame":  # noqa: F821
 
 
 def _edge_fingerprint(
-    edges: DataFrame, with_chars: bool = False
+    edges: DataFrame, with_bytes: bool = False
 ) -> tuple[int, int] | tuple[int, int, int]:
     """(count, order-independent checksum) of an edge set — the convergence
     probe. Two scalars cross the driver per round, never rows. With
-    ``with_chars`` (string-id gate, first call only) the same action also
-    returns total id characters for the collect-footprint estimate."""
+    ``with_bytes`` (string-id gate, first call only) the same action also
+    returns total id bytes for the collect-footprint estimate."""
     aggs = [
         F.count("*").alias("n"),
         F.coalesce(
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
         ).alias("h"),
     ]
-    if with_chars:
+    if with_bytes:
         aggs.append(
             F.coalesce(
-                F.sum((F.length("u") + F.length("v")).cast("long")), F.lit(0)
+                F.sum((F.octet_length("u") + F.octet_length("v")).cast("long")),
+                F.lit(0),
             ).alias("c")
         )
     row = edges.agg(*aggs).collect()[0]
-    if with_chars:
+    if with_bytes:
         return int(row["n"]), int(row["h"]), int(row["c"])
     return int(row["n"]), int(row["h"])
 
@@ -259,7 +266,7 @@ def connected_components(
         # edge counts the fixpoint is pure job latency and this halves it
         e = e.localCheckpoint(eager=False)
         # string ids: the same fingerprint action also measures total id
-        # chars, so the local gate can bound the COLLECTED footprint, not
+        # bytes, so the local gate can bound the COLLECTED footprint, not
         # just the row count (module constant docstring)
         from pyspark.sql import types as T
 
@@ -268,7 +275,7 @@ def connected_components(
             local_edge_bytes_max
         )
         if gate_bytes:
-            n, h, chars = _edge_fingerprint(e, with_chars=True)
+            n, h, id_bytes = _edge_fingerprint(e, with_bytes=True)
         else:
             n, h = _edge_fingerprint(e)
         if stats is not None:
@@ -277,7 +284,7 @@ def connected_components(
         local = bool(local_edges_max) and 0 < n <= local_edges_max
         if local and gate_bytes:
             local = (
-                chars + 2 * _STRING_CELL_OVERHEAD * n <= local_edge_bytes_max
+                id_bytes + 2 * _STRING_CELL_OVERHEAD * n <= local_edge_bytes_max
             )
         label_pdf = None
         if local:

@@ -111,3 +111,35 @@ def test_lineage_commit_and_resume_noop(crawl_state, spark, t1_dir):
     again = run_crawl(spark, catalog, t1_dir, cfg)
     assert again["iterations"] == []
     assert again["start_iter"] == done + 1
+
+
+def test_perfbench_loop_actions_name_lines_of_the_loop():
+    """perfbench/spans.LOOP_ACTIONS attributes the loop's driver actions to
+    layers by (function, source line) of crawl/loop.py. A loop edit that
+    changes one of those lines silently turns the matching per-layer
+    metric (crawl.politeness.dequeue_s, crawl.fetch.fetch_dedup_s) into 0."""
+    import ast
+    import pathlib
+
+    from nightcrawler_ds_pipeline_spark.crawl import loop
+
+    spans_py = pathlib.Path(__file__).resolve().parents[1] / "perfbench" / "spans.py"
+    loop_actions = next(
+        ast.literal_eval(n.value)
+        for n in ast.parse(spans_py.read_text()).body
+        if isinstance(n, ast.Assign) and getattr(n.targets[0], "id", "") == "LOOP_ACTIONS"
+    )
+    src = pathlib.Path(loop.__file__).read_text().splitlines()
+    funcs = {
+        n.name: n for n in ast.walk(ast.parse("\n".join(src)))
+        if isinstance(n, ast.FunctionDef)
+    }
+    assert loop_actions
+    for fn, line in loop_actions:
+        assert fn in funcs, f"{fn} is not a function of crawl/loop.py"
+        node = funcs[fn]
+        body = [
+            text.split("#")[0].strip()
+            for text in src[node.lineno - 1 : node.end_lineno]
+        ]
+        assert line in body, f"{line!r} is not a line of loop.{fn}"

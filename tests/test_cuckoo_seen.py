@@ -80,7 +80,7 @@ def test_filter_unseen_cuckoo_exactness(spark):
     out = {
         r["url_hash"]
         for r in filter_unseen(
-            spark, cands, seen, cuckoo, num_partitions=8, sketch="cuckoo"
+            cands, seen, cuckoo, num_partitions=8, sketch="cuckoo"
         ).collect()
     }
     assert out == set(range(1, 500, 2))  # exactly the odd (unseen) keys

@@ -49,7 +49,7 @@ def test_seen_antijoin_shape(spark, t1_dir):
     frontier = seed_frontier(serp)
     seen = frontier.limit(10).select("url_hash", "canonical_url",
                                      F.lit(0).alias("seen_iter"))
-    plan = _plan(filter_unseen(spark, frontier, seen, None))
+    plan = _plan(filter_unseen(frontier, seen, None))
     assert "LeftAnti" in plan  # exact anti-join is the decider
 
 

@@ -151,6 +151,39 @@ def test_bloom_rebuilt_after_gap_iteration(spark, tmp_path, t1_dir):
     assert cat.latest_iter("bloom") == cat.latest_iter("seen")
 
 
+def test_resume_rebuilds_sketch_whose_meta_lacks_modulus(
+    spark, tmp_path, t1_dir, monkeypatch
+):
+    """Sketch validity is read from the snapshot manifest alone: a stored
+    sketch whose meta lacks num_partitions (a catalog written before the
+    modulus travelled in the meta) is not trusted. The resume rebuilds it
+    exactly once from the seen table, persists the modulus with the next
+    snapshot, and equals an uninterrupted run."""
+    from nightcrawler_ds_pipeline_spark.crawl.seen import BloomSketch
+
+    base = dict(max_per_host=10, window_ms=10_000, bloom_min_seen=0)
+    pure = SnapshotCatalog(str(tmp_path / "pure"))
+    run_crawl(spark, pure, t1_dir, CrawlConfig(iterations=3, **base))
+
+    cat = SnapshotCatalog(str(tmp_path / "old"))
+    run_crawl(spark, cat, t1_dir, CrawlConfig(iterations=2, **base))
+    snaps = cat._load_manifest("bloom")
+    for snap in snaps:
+        snap["meta"].pop("num_partitions")
+    cat._commit_manifest("bloom", snaps)
+
+    builds = []
+    build = BloomSketch.build
+    monkeypatch.setattr(
+        BloomSketch, "build", lambda self, *a: builds.append(a) or build(self, *a)
+    )
+    out = run_crawl(spark, cat, t1_dir, CrawlConfig(iterations=3, **base))
+    assert out["start_iter"] == 2 and out["iterations"][0]["dequeued"] > 0
+    assert len(builds) == 1
+    assert cat.latest_meta("bloom")["num_partitions"] == BloomSketch().num_partitions
+    assert _final_state(spark, cat) == _final_state(spark, pure)
+
+
 def test_schema_evolution_across_resume(spark, tmp_path):
     """A crash straddling a schema-widening commit must roll back and roll
     forward consistently: the orphan wide snapshot disappears, committed

@@ -46,6 +46,26 @@ def test_long_string_ids_route_to_distributed(spark):
     assert _labels(out) == {(x, root) for x in (a, b, c, d)}
 
 
+def test_non_ascii_ids_gate_on_bytes_not_chars(spark):
+    # ids of mostly 3-byte UTF-8 chars: the cap sits just above the
+    # estimate by CHARACTERS and below the estimate by BYTES, so only a
+    # byte-sized gate routes this graph to the distributed fixpoint
+    from tests.test_components import _union_find
+
+    a, b, c, d, x = ("日本語のページ" + k for k in "abcdx")
+    pairs = [(b, a), (c, b), (d, x)]
+    overhead = 2 * C._STRING_CELL_OVERHEAD * len(pairs)
+    cap = sum(len(u) + len(v) for u, v in pairs) + overhead
+    assert sum(len(u.encode()) + len(v.encode()) for u, v in pairs) + overhead > cap
+    stats = {}
+    out = C.connected_components(
+        spark.createDataFrame(pairs, ["u", "v"]), stats=stats, local_edge_bytes_max=cap
+    )
+    assert stats["rounds"] >= 1  # distributed path
+    assert "local_edges" not in stats
+    assert _labels(out) == set(_union_find([a, b, c, d, x], pairs).items())
+
+
 def test_short_string_ids_stay_local(spark):
     # short ids under both gates -> local union-find (rounds == 0)
     edges = spark.createDataFrame([("i1", "i2"), ("i2", "i3")], ["u", "v"])

@@ -8,7 +8,6 @@ from nightcrawler_ds_pipeline_spark.crawl.cuckoo import CuckooFilter
 from nightcrawler_ds_pipeline_spark.crawl import seen as seen_mod
 from nightcrawler_ds_pipeline_spark.crawl.seen import (
     build_bloom_partitions,
-    bloom_maybe_seen_udf,
     bloom_suspect_keys,
     filter_unseen,
     merge_bloom_tables,
@@ -36,19 +35,19 @@ def test_iceberg_catalog_is_gated():
 
 
 def test_bloom_no_false_negatives_and_low_fp(spark):
-    keys = spark.range(0, 20_000).select(
+    # default modulus (256) with 100 keys: most partitions have NO sketch
+    # row, so most fresh keys meet an empty sketch side in the cogroup
+    keys = spark.range(0, 100).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    bloom = build_bloom_partitions(keys, num_partitions=8)
-    maybe = bloom_maybe_seen_udf(spark, bloom, num_partitions=8)
+    bloom = build_bloom_partitions(keys)
     # no false negatives: every inserted key reports maybe-seen
-    inserted = keys.withColumn("m", maybe(F.col("url_hash")))
-    assert inserted.filter(~F.col("m")).count() == 0
+    assert keys.join(bloom_suspect_keys(keys, bloom), "url_hash", "left_anti").count() == 0
     # low false-positive rate on fresh keys
     fresh = spark.range(1_000_000, 1_020_000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    fp = fresh.withColumn("m", maybe(F.col("url_hash"))).filter(F.col("m")).count()
+    fp = bloom_suspect_keys(fresh, bloom).count()
     assert fp / 20_000 < 0.01
 
 
@@ -59,9 +58,9 @@ def test_bloom_merge(spark):
         build_bloom_partitions(a, num_partitions=4),
         build_bloom_partitions(b, num_partitions=4),
     )
-    maybe = bloom_maybe_seen_udf(spark, merged, num_partitions=4)
-    both = a.unionByName(b).withColumn("m", maybe(F.col("url_hash")))
-    assert both.filter(~F.col("m")).count() == 0
+    both = a.unionByName(b)
+    suspects = bloom_suspect_keys(both, merged, num_partitions=4)
+    assert both.join(suspects, "url_hash", "left_anti").count() == 0
 
 
 def test_filter_unseen_exactness(spark):
@@ -71,7 +70,7 @@ def test_filter_unseen_exactness(spark):
     )
     seen = all_keys.filter(F.col("url_hash") % 2 == 0)
     bloom = build_bloom_partitions(seen, num_partitions=4, num_bits=1 << 10)  # tiny → many FPs
-    out = filter_unseen(spark, all_keys, seen, bloom, num_partitions=4)
+    out = filter_unseen(all_keys, seen, bloom, num_partitions=4)
     expected = all_keys.join(seen, "url_hash", "left_anti")
     assert out.count() == expected.count()
     assert out.exceptAll(expected).count() == 0
@@ -95,67 +94,37 @@ def test_copartition_probe_no_false_negatives(spark):
 
 
 def test_filter_unseen_copartition_never_collects_sketches(spark, monkeypatch):
-    # the production (default) probe must not route through the
-    # driver-collect broadcast path — monkeypatch it to a tripwire
-    def boom(*a, **k):  # pragma: no cover - tripwire
-        raise AssertionError("driver-collect bloom path used in copartition mode")
+    # the probe must never bring a sketch to the driver (SCALE.md §2: at
+    # the design point the sketch table is ~12.5 GB) — every Python-side
+    # collect and broadcast is a tripwire while the filter is built and run
+    from pyspark import SparkContext
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    monkeypatch.setattr(seen_mod, "bloom_maybe_seen_udf", boom)
+    def boom(*a, **k):  # pragma: no cover - tripwire
+        raise AssertionError("the seen filter collected or broadcast a sketch")
+
     all_keys = spark.range(0, 3000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
     seen = all_keys.filter(F.col("url_hash") % 3 == 0)
     bloom = build_bloom_partitions(seen, num_partitions=4)
-    out = seen_mod.filter_unseen(spark, all_keys, seen, bloom, num_partitions=4)
-    # plan shape: cogrouped map-side probe + exact joins
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
     expected = all_keys.join(seen, "url_hash", "left_anti")
-    assert out.count() == expected.count()
-    assert out.exceptAll(expected).count() == 0
-
-
-def test_filter_unseen_probe_modes_agree(spark):
-    all_keys = spark.range(0, 4000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    seen = all_keys.filter(F.col("url_hash") % 2 == 0)
-    bloom = build_bloom_partitions(seen, num_partitions=4, num_bits=1 << 10)
-    co = filter_unseen(spark, all_keys, seen, bloom, num_partitions=4)
-    bc = filter_unseen(
-        spark, all_keys, seen, bloom, num_partitions=4, probe="broadcast"
-    )
-    assert co.exceptAll(bc).count() == 0 and bc.exceptAll(co).count() == 0
-
-
-def test_filter_unseen_cuckoo_rejects_broadcast_probe(spark):
-    """The diagnostic broadcast probe exists only for the Bloom — combining
-    it with sketch='cuckoo' must fail loudly, not silently fall back."""
-    import pytest
-
-    from nightcrawler_ds_pipeline_spark.crawl.seen import build_cuckoo_partitions
-
-    all_keys = spark.range(0, 500).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    seen = all_keys.filter(F.col("url_hash") % 2 == 0)
-    sketch = build_cuckoo_partitions(seen, num_partitions=4)
-    with pytest.raises(ValueError, match="copartition"):
-        filter_unseen(
-            spark,
-            all_keys,
-            seen,
-            sketch,
-            num_partitions=4,
-            probe="broadcast",
-            sketch="cuckoo",
-        )
+    with monkeypatch.context() as m:
+        for name in ("collect", "toPandas", "toLocalIterator", "first", "take"):
+            m.setattr(DataFrame, name, boom)
+        m.setattr(SparkContext, "broadcast", boom)
+        out = seen_mod.filter_unseen(all_keys, seen, bloom, num_partitions=4)
+        # plan shape: cogrouped map-side probe + exact joins
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" in plan
+        assert out.count() == expected.count()
+        assert out.exceptAll(expected).count() == 0
 
 
 def test_bloom_modulus_mismatch_fails_loudly(spark):
     """A probe with a different bloom_partitions than the stored sketches
-    would silently produce false negatives (duplicate crawls) — both probe
-    paths must refuse instead."""
+    would silently produce false negatives (duplicate crawls) — the probe
+    must refuse instead, directly and through filter_unseen."""
     import pytest
 
     keys = spark.range(0, 2000).select(
@@ -165,7 +134,7 @@ def test_bloom_modulus_mismatch_fails_loudly(spark):
     with pytest.raises(Exception, match="modulus"):
         bloom_suspect_keys(keys, bloom, num_partitions=4).count()
     with pytest.raises(Exception, match="modulus"):
-        bloom_maybe_seen_udf(spark, bloom, num_partitions=4)
+        filter_unseen(keys, keys, bloom, num_partitions=4).count()
     # geometry mixes refuse to merge
     other = build_bloom_partitions(keys, num_partitions=8, num_bits=1 << 12)
     with pytest.raises(Exception, match="geometry"):

@@ -825,7 +825,7 @@ def test_batch_ttl_matches_stream_watermark_horizon(spark, tmp_path):
         )
         if seen is not None:
             seen = seen.filter(F.col("seen_iter") > it - ttl_iters)
-        admitted = filter_unseen(spark, frontier, seen, None)
+        admitted = filter_unseen(frontier, seen, None)
         got = {r["url"] for r in admitted.select("url").collect()}
         batch_admitted.append(got)
         keyed = with_canonical(

@@ -77,3 +77,38 @@ def test_absent_host_state_carries_forward(spark, tiny):
     state1 = politeness.next_bucket_state(gated, batch, prev, window_ms=10_000)
     rows = {r["host"]: r["tokens_ms"] for r in state1.collect()}
     assert rows["gone.host"] == 7_500  # untouched while absent
+
+
+def test_bucket_columns_match_scalar_compute_budget(spark):
+    """The Column token bucket (dequeue_gated, next_bucket_state,
+    host_budget_col) and the scalar one the streaming dequeue uses are one
+    definition: equal over a grid with delay ≤ 0, delay > window, negative,
+    missing and over-cap token levels."""
+    from nightcrawler_ds_pipeline_spark.streaming.politeness_stream import (
+        compute_budget,
+    )
+
+    tokens = [None, -5_000, 0, 1, 4_999, 10_000, 25_000, 10**7]
+    delays = [-1, 0, 1, 999, 1_000, 5_000, 10_000, 10_001, 25_000]
+    grid = spark.createDataFrame(
+        [(t, d) for t in tokens for d in delays],
+        "tokens_ms long, crawl_delay_ms int",
+    )
+    for window_ms in (1_000, 10_000):
+        for max_per_host in (0, 1, 3, 100):
+            available, budget = politeness.token_bucket_cols(
+                F.col("tokens_ms"), window_ms, max_per_host
+            )
+            rows = grid.select(
+                "tokens_ms",
+                "crawl_delay_ms",
+                available.alias("available"),
+                budget.alias("budget"),
+                politeness.host_budget_col(window_ms, max_per_host).alias("fresh"),
+            ).collect()
+            assert len(rows) == len(tokens) * len(delays)
+            for r in rows:
+                t, d = r["tokens_ms"], r["crawl_delay_ms"]
+                want = compute_budget(t or 0, d, window_ms, max_per_host)
+                assert (r["available"], r["budget"]) == want, (window_ms, max_per_host, t, d)
+                assert r["fresh"] == compute_budget(0, d, window_ms, max_per_host)[1]
