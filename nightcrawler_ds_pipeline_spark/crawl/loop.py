@@ -24,7 +24,7 @@ snapshot commits and the "cache hit suppresses re-fetch" behavior
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -56,7 +56,6 @@ class CrawlConfig:
     bloom_partitions: int = DEFAULT_NUM_PARTITIONS
     outlink_priority_decay: float = 0.5
     run_ts: str = "1970-01-01_00-00-00"  # injected, never wall-clock
-    frontier_shuffle_partitions: int | None = None
     # TTL re-crawl (reference cache_duration, api_caller.py:24,74: an
     # expired cache entry no longer suppresses the re-fetch). A seen entry
     # older than ttl_iters iterations stops suppressing: the URL re-enters
@@ -95,7 +94,6 @@ class CrawlConfig:
     # iterations — bounds the small-file count the next iteration scans
     # (SnapshotCatalog.compact; the Iceberg rewrite_data_files analogue)
     compact_every: int | None = None
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if self.sketch not in ("bloom", "cuckoo"):
@@ -447,10 +445,6 @@ def run_crawl(
         )
 
         next_frontier = remaining.unionByName(edges.select(*FRONTIER_COLS))
-        if cfg.frontier_shuffle_partitions:
-            next_frontier = next_frontier.repartition(
-                cfg.frontier_shuffle_partitions, "host"
-            )
 
         # 6. commit snapshots — lineage strictly last (the commit point).
         # The five non-lineage snapshots are mutually independent once the
