@@ -21,9 +21,9 @@ ahead, no 6.33-only feature in the message).
 It must run BEFORE the JVM starts (child processes inherit the driver
 env), which is why ``session.get_spark`` calls it unconditionally — the
 call is two ``os.path`` checks when the env is already settled. No-op when
-a real protobuf is installed; returns False (callers fall back to the
-two-query frontier flow, streaming/frontier_flow.py) when no runtime
-exists anywhere.
+a real protobuf is installed; returns False when no runtime exists
+anywhere, and the streaming frontier (streaming/frontier.py) then raises
+RuntimeError — there is no fallback path.
 """
 
 from __future__ import annotations

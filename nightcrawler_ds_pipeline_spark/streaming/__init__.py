@@ -2,12 +2,8 @@ from nightcrawler_ds_pipeline_spark.streaming.catalog_sink import (
     catalog_stream_writer,
     committed_stream_batch_max,
 )
-from nightcrawler_ds_pipeline_spark.streaming.frontier_flow import (
+from nightcrawler_ds_pipeline_spark.streaming.frontier import (
     run_streaming_frontier,
-)
-from nightcrawler_ds_pipeline_spark.streaming.frontier_single import (
-    run_streaming_frontier_single,
-    streaming_frontier_single_plan,
 )
 from nightcrawler_ds_pipeline_spark.streaming.image_ingest import (
     streaming_image_ingest,
@@ -27,8 +23,6 @@ __all__ = [
     "committed_stream_batch_max",
     "join_fetch_extract_streams",
     "run_streaming_frontier",
-    "run_streaming_frontier_single",
-    "streaming_frontier_single_plan",
     "streaming_image_ingest",
     "streaming_seen_filter",
     "streaming_token_bucket_dequeue",

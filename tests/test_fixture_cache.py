@@ -62,7 +62,7 @@ def test_old_retired_copies_are_swept(tmp_path):
 
 def test_first_nonnull_delay_skips_leading_null():
     """ADVICE r4 #3: a NULL crawl_delay_ms in the FIRST row of a host's
-    micro-batch (plausible under frontier_flow's coalesce(lookup, feed))
+    micro-batch (plausible under the frontier's coalesce(lookup, feed))
     must not raise int(NaN) inside the stateful UDF."""
     pdf = pd.DataFrame({"crawl_delay_ms": [None, 250.0, 100.0]})
     assert first_nonnull_delay(pdf, fallback=999) == 250

@@ -351,12 +351,11 @@ def test_expire_snapshots_preserves_stream_batch_watermark(spark, tmp_path):
     assert catalog.read(spark, "t").count() == 5
 
 
-def test_streaming_frontier_flow_end_to_end(spark, tmp_path):
+def test_streaming_frontier_end_to_end(spark, tmp_path):
     """Composed streaming frontier (discovery → seen filter → token-bucket
     dequeue → catalog): dup variants suppressed at admit, hot host clipped
     to its politeness budget by priority, and a second drain resumes every
-    state piece — seen keys, hand-off files, token levels, committed
-    micro-batches."""
+    state piece — seen keys, token levels, committed micro-batches."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -400,7 +399,6 @@ def test_streaming_frontier_flow_end_to_end(spark, tmp_path):
         return run_streaming_frontier(
             spark,
             str(src),
-            str(tmp_path / "work"),
             catalog,
             str(tmp_path / "ck"),
             delay="1 hour",
@@ -409,8 +407,7 @@ def test_streaming_frontier_flow_end_to_end(spark, tmp_path):
         )
 
     c1 = drain()
-    # hot/p/1 admitted once (first arrival wins; 2 variants suppressed)
-    assert c1["admitted"] == 10
+    # hot/p/1 admitted once (first arrival wins; 2 variants suppressed);
     # hot: budget = 3000ms // 1000ms = 3; other: 3000 // 100 = 30 -> both
     assert c1["dequeued"] == 5
     deq = catalog.read(spark, "dequeued").toPandas()
@@ -418,21 +415,23 @@ def test_streaming_frontier_flow_end_to_end(spark, tmp_path):
     assert list(hot1["priority"]) == [8.0, 7.0, 6.0]  # top-3 by priority
     assert list(hot1["rank_in_host"]) == [1, 2, 3]
 
-    # drain 2: one already-seen URL + 4 new hot URLs
+    # drain 2: one already-seen URL, outranking 4 new hot URLs
     write_disc(
         "d2.parquet",
-        [("https://hot.example/p/2?utm_medium=m", "2024-01-01 10:10", 9.0, 1000)]
+        [("https://hot.example/p/2?utm_medium=m", "2024-01-01 10:10", 20.0, 1000)]
         + [
             (f"https://hot.example/q/{i}", "2024-01-01 10:10", 10.0 + i, 1000)
             for i in range(4)
         ],
     )
     c2 = drain()
-    assert c2["admitted"] == 14  # +4 new only; p/2 variant suppressed
     # token state carried: spent all 3000 in drain 1 -> available 3000
     # again -> 3 of the 4 new hot rows pass, the lowest-priority one clipped
     assert c2["dequeued"] == 8
     deq2 = catalog.read(spark, "dequeued").toPandas()
+    # seen state survived the restart: the p/2 variant was suppressed
+    # (admitted, it would have taken the first budget slot)
+    assert not (deq2.priority == 20.0).any()
     q_rows = deq2[deq2.priority >= 10.0]
     assert sorted(q_rows["priority"]) == [11.0, 12.0, 13.0]
     # exactly-once catalog commits: monotone stream_batch_ids, one per batch
@@ -481,7 +480,6 @@ def test_streaming_frontier_delay_lookup_governs_budget(spark, tmp_path):
     counts = run_streaming_frontier(
         spark,
         str(src),
-        str(tmp_path / "dl_work"),
         catalog,
         str(tmp_path / "dl_ck"),
         delay="1 hour",
@@ -489,7 +487,6 @@ def test_streaming_frontier_delay_lookup_governs_budget(spark, tmp_path):
         max_per_host=100,
         delay_lookup=lookup,
     )
-    assert counts["admitted"] == 20
     deq = catalog.read(spark, "dequeued").toPandas()
     per_host = deq.groupby("host").size().to_dict()
     # budgets: fast 10000//100 = 100 -> all 10; slow 10000//5000 = 2
@@ -497,9 +494,8 @@ def test_streaming_frontier_delay_lookup_governs_budget(spark, tmp_path):
 
 
 def test_streaming_frontier_empty_source_is_clean(spark, tmp_path):
-    """A drain over an empty discovery dir returns zero counts instead of
-    crashing on the not-yet-materialized hand-off dir (the file sink only
-    creates it on the first committed batch)."""
+    """A drain over an empty discovery dir is clean: zero counts, no
+    crash."""
     from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
     from nightcrawler_ds_pipeline_spark.streaming import run_streaming_frontier
 
@@ -508,11 +504,10 @@ def test_streaming_frontier_empty_source_is_clean(spark, tmp_path):
     counts = run_streaming_frontier(
         spark,
         str(src),
-        str(tmp_path / "empty_work"),
         SnapshotCatalog(str(tmp_path / "empty_cat")),
         str(tmp_path / "empty_ck"),
     )
-    assert counts == {"admitted": 0, "dequeued": 0, "overflow": 0}
+    assert counts == {"dequeued": 0, "overflow": 0}
 
 
 def test_streaming_seen_filter_rocksdb_state(spark, tmp_path):
@@ -666,9 +661,10 @@ def test_stream_stream_interval_join_fetch_extract(spark, tmp_path):
 
 def test_multi_stateful_dedup_then_windowed_agg_single_query(spark, tmp_path):
     """Spark 4 chains SOME stateful operators in one append-mode query:
-    dropDuplicatesWithinWatermark → windowed count works (this test), while
-    a custom applyInPandasWithState op cannot follow another stateful op —
-    which is exactly why frontier_flow splits into two queries."""
+    dropDuplicatesWithinWatermark → windowed count works (this test). A
+    custom applyInPandasWithState op cannot follow another stateful op, a
+    transformWithStateInPandas one can — which is why streaming/frontier.py
+    runs its dequeue on transformWithState and stays one query."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -753,7 +749,6 @@ def test_streaming_frontier_overflow_routed_to_own_table(spark, tmp_path):
     counts = run_streaming_frontier(
         spark,
         str(src),
-        str(tmp_path / "ovf_work"),
         catalog,
         str(tmp_path / "ovf_ck"),
         delay="1 hour",
@@ -763,7 +758,6 @@ def test_streaming_frontier_overflow_routed_to_own_table(spark, tmp_path):
         max_pending_per_host=2,
     )
     # 10 urls, budget 3, cap 2 -> 3 dequeued, 2 pending, 5 overflow
-    assert counts["admitted"] == 10
     assert counts["dequeued"] == 3
     assert counts["overflow"] == 5
     deq = catalog.read(spark, "dequeued").toPandas()

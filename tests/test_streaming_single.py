@@ -1,19 +1,20 @@
-"""Single-query streaming frontier (transformWithState): equivalence with
-the two-query flow, carry-over semantics across a restart, and overflow
-routing — VERDICT r4 #3 (one query = one checkpoint = no intermediate
-sink; the two-query flow stays as the documented fallback)."""
+"""Streaming frontier (one transformWithState query): carry-over
+semantics across a restart, the empty pending-queue write, and the
+spark-submit job driven for two drains."""
+
+import importlib.util
+import json
+import os
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from nightcrawler_ds_pipeline_spark.compat import ensure_tws_python_env
-
-pytestmark = pytest.mark.skipif(
-    not ensure_tws_python_env(),
-    reason="no google.protobuf runtime on disk — transformWithState "
-    "unavailable; two-query flow covers the semantics",
+JOB = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "jobs",
+    "run_stream_frontier_job.py",
 )
 
 
@@ -34,88 +35,20 @@ def _write_disc(src, name, rows):
     )
 
 
-WORKLOAD = (
-    [
-        (f"https://hot.example/p/{i}", "2024-01-01 10:00", i, 1000)
-        for i in range(1, 9)
-    ]
-    + [
-        ("https://other.example/a", "2024-01-01 10:00", 1.0, 100),
-        ("https://other.example/b", "2024-01-01 10:00", 2.0, 100),
-    ]
-    + [  # tracking-param variants of hot/p/1 — one canonical seen key
-        ("https://hot.example/p/1?utm_source=x", "2024-01-01 10:01", 9.0, 1000),
-        ("https://hot.example/p/1?utm_source=y", "2024-01-01 10:02", 9.0, 1000),
-    ]
-)
-
-
-def test_single_query_flow_matches_two_query(spark, tmp_path):
-    """Identical workload through the one-query chain and the two-query
-    flow: the committed dequeue sets (host, url_hash, rank_in_host) must
-    be identical — same seen suppression, same budget arithmetic."""
-    from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
-    from nightcrawler_ds_pipeline_spark.streaming import (
-        run_streaming_frontier,
-        run_streaming_frontier_single,
-    )
-
-    src = tmp_path / "disc"
-    src.mkdir()
-    _write_disc(src, "d1.parquet", WORKLOAD)
-
-    cat_two = SnapshotCatalog(str(tmp_path / "cat_two"))
-    two = run_streaming_frontier(
-        spark,
-        str(src),
-        str(tmp_path / "work_two"),
-        cat_two,
-        str(tmp_path / "ck_two"),
-        delay="1 hour",
-        window_ms=3000,
-        max_per_host=100,
-    )
-    cat_one = SnapshotCatalog(str(tmp_path / "cat_one"))
-    one = run_streaming_frontier_single(
-        spark,
-        str(src),
-        cat_one,
-        str(tmp_path / "ck_one"),
-        delay="1 hour",
-        window_ms=3000,
-        max_per_host=100,
-    )
-    assert one["dequeued"] == two["dequeued"] > 0
-
-    def dequeue_set(cat):
-        pdf = cat.read(spark, "dequeued").toPandas()
-        return set(
-            zip(pdf["host"], pdf["url_hash"], pdf["rank_in_host"])
-        )
-
-    assert dequeue_set(cat_one) == dequeue_set(cat_two)
-    # budget shape: hot clipped to 3000//1000 = 3, other 3000//100 -> both
-    pdf = cat_one.read(spark, "dequeued").toPandas()
-    per_host = pdf.groupby("host").size().to_dict()
-    assert per_host == {"hot.example": 3, "other.example": 2}
-
-
 def test_single_query_carry_over_restart(spark, tmp_path):
     """carry_over=True across a RESTART of the same checkpoint: pending
     rows held in ListState compete with (and outrank) new arrivals on the
     next drain — the batch loop's rows-stay-in-frontier semantics in one
     query."""
     from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
-    from nightcrawler_ds_pipeline_spark.streaming import (
-        run_streaming_frontier_single,
-    )
+    from nightcrawler_ds_pipeline_spark.streaming import run_streaming_frontier
 
     src = tmp_path / "co_disc"
     src.mkdir()
     catalog = SnapshotCatalog(str(tmp_path / "co_cat"))
 
     def drain():
-        return run_streaming_frontier_single(
+        return run_streaming_frontier(
             spark,
             str(src),
             catalog,
@@ -153,38 +86,99 @@ def test_single_query_carry_over_restart(spark, tmp_path):
     assert sorted(new["priority"], reverse=True) == [5.0, 4.0, 3.0]
 
 
-def test_single_query_overflow_routed(spark, tmp_path):
-    """Pending-cap evictions commit to 'overflow', never 'dequeued' —
-    same routing contract as the two-query flow."""
+def test_carry_over_all_dequeued_leaves_empty_pending(spark, tmp_path):
+    """carry_over=True with every row inside the budget: the pending queue
+    ends empty, which must clear the ListState (the state store rejects an
+    empty list value and used to abort the query with EMPTY_LIST_VALUE)."""
     from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
-    from nightcrawler_ds_pipeline_spark.streaming import (
-        run_streaming_frontier_single,
-    )
+    from nightcrawler_ds_pipeline_spark.streaming import run_streaming_frontier
 
-    src = tmp_path / "ov_disc"
+    src = tmp_path / "ep_disc"
     src.mkdir()
-    catalog = SnapshotCatalog(str(tmp_path / "ov_cat"))
     _write_disc(
         src,
         "d1.parquet",
         [
-            (f"https://hot.example/p/{i}", "2024-01-01 10:00", i, 1000)
-            for i in range(1, 11)
+            ("https://hot.example/p/1", "2024-01-01 10:00", 1.0, 1000),
+            ("https://hot.example/p/2", "2024-01-01 10:00", 2.0, 1000),
         ],
     )
-    counts = run_streaming_frontier_single(
+    counts = run_streaming_frontier(
         spark,
         str(src),
-        catalog,
-        str(tmp_path / "ov_ck"),
+        SnapshotCatalog(str(tmp_path / "ep_cat")),
+        str(tmp_path / "ep_ck"),
         delay="1 hour",
-        window_ms=3000,
+        window_ms=3000,  # delay 1000 -> budget 3 >= 2 rows
         max_per_host=100,
         carry_over=True,
-        max_pending_per_host=2,
     )
-    # 10 urls, budget 3, cap 2 -> 3 dequeued, 2 pending, 5 overflow
-    assert counts == {"dequeued": 3, "overflow": 5}
-    ovf = catalog.read(spark, "overflow").toPandas()
-    assert set(ovf["rank_in_host"]) == {0}
-    assert sorted(ovf["priority"]) == [1.0, 2.0, 3.0, 4.0, 5.0]
+    assert counts == {"dequeued": 2, "overflow": 0}
+
+
+def test_stream_frontier_job_two_drains(spark, tmp_path, monkeypatch, capsys):
+    """jobs/run_stream_frontier_job.py end to end: two drains over the same
+    dirs with --carry-over --delay-lookup print the committed counts, and
+    the removed hand-off flag --work is rejected."""
+    spec = importlib.util.spec_from_file_location("stream_frontier_job", JOB)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    src = tmp_path / "job_disc"
+    src.mkdir()
+    lookup = str(tmp_path / "delays.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "host": pa.array(["hot.example"]),
+                "crawl_delay_ms": pa.array([1000], type=pa.int64()),
+            }
+        ),
+        lookup,
+    )
+    sink = str(tmp_path / "job_cat")
+    argv = [
+        "run_stream_frontier_job.py",
+        "--source", str(src),
+        "--sink", sink,
+        "--checkpoint", str(tmp_path / "job_ck"),
+        "--window-ms", "3000",
+        "--max-per-host", "100",
+        "--carry-over",
+        "--delay-lookup", lookup,
+    ]
+
+    # main() re-applies get_spark's builder confs to the shared session
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def drain():
+        monkeypatch.setattr("sys.argv", argv)
+        try:
+            job.main()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    # the feed knows no delays: the lookup's 1000 ms gives budget 3
+    _write_disc(
+        src,
+        "d1.parquet",
+        [
+            (f"https://hot.example/p/{i}", "2024-01-01 10:00", i, None)
+            for i in range(1, 9)
+        ],
+    )
+    assert drain() == {"dequeued": 3, "overflow": 0, "sink": sink}
+    # one low-priority arrival wakes the host; 3 carried rows outrank it
+    _write_disc(
+        src,
+        "d2.parquet",
+        [("https://hot.example/p/99", "2024-01-01 11:30", 0.5, None)],
+    )
+    assert drain() == {"dequeued": 6, "overflow": 0, "sink": sink}
+
+    monkeypatch.setattr("sys.argv", argv + ["--work", str(tmp_path / "w")])
+    with pytest.raises(SystemExit) as exc:
+        job.main()
+    assert exc.value.code == 2
+    assert "unrecognized arguments: --work" in capsys.readouterr().err

@@ -1,15 +1,24 @@
-"""applyInPandasWithState token-bucket politeness: micro-batch streaming
+"""transformWithState token-bucket politeness: micro-batch streaming
 must equal the batch dequeue + bucket accounting iteration-for-iteration."""
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
 from nightcrawler_ds_pipeline_spark.crawl import politeness
 from nightcrawler_ds_pipeline_spark.streaming import (
     streaming_token_bucket_dequeue,
 )
+from nightcrawler_ds_pipeline_spark.streaming.frontier import rocksdb_state_store
+
+
+@pytest.fixture(autouse=True)
+def _rocksdb(spark):
+    """transformWithState runs only on the RocksDB state store provider."""
+    with rocksdb_state_store(spark):
+        yield
 
 WINDOW_MS = 10_000
 MAX_PER_HOST = 5
@@ -121,7 +130,7 @@ def _write_frontier(src, name, rows):
 
 
 def test_streaming_dequeue_carry_over_pending(spark, tmp_path):
-    """carry_over=True: budget-clipped rows persist in group state and
+    """carry_over=True: budget-clipped rows persist in pending state and
     compete with new arrivals next micro-batch — the batch loop's
     rows-stay-in-frontier semantics, which pass-once mode drops."""
     src = tmp_path / "carry_src"
@@ -211,8 +220,8 @@ def test_streaming_dequeue_pending_cap_overflow_flagged(spark, tmp_path):
 
 
 def test_streaming_dequeue_timeout_flush_drains_pending(spark, tmp_path):
-    """flush_interval_ms: with a continuous trigger, ProcessingTimeTimeout
-    wakes idle hosts so pending rows drain on refreshed budgets without
+    """flush_interval_ms: with a continuous trigger, processing-time timers
+    wake idle hosts so pending rows drain on refreshed budgets without
     any new arrival (do NOT use processAllAvailable here — zero-data
     timeout batches never settle; poll the sink instead)."""
     import time
