@@ -3,8 +3,9 @@
 Each iteration is one batch job:
   1. read frontier (committed state only) → not-seen filter (Bloom pre-pass
      + exact anti-join, `seen.filter_unseen`)
-  2. robots gate + per-host token-bucket priority dequeue (`politeness.dequeue`)
-     → deterministic (priority desc, url_hash asc) crawl order `seq`
+  2. robots gate (`politeness.robots_filter`) + per-host token-bucket
+     priority dequeue (`politeness.dequeue_gated`) → deterministic
+     (priority desc, url_hash asc) crawl order `seq`
   3. fetch + decode + phash (`fetch.fetch_batch`)
   4. phash dedup: exact-duplicate images flagged against both the historical
      results and earlier rows of the same batch
@@ -13,6 +14,10 @@ Each iteration is one batch job:
   6. append per-partition lineage rows LAST — the lineage commit finalizes
      the iteration; resume replays from the last finalized iteration and
      ignores any newer uncommitted snapshots (exact resume).
+
+An iteration whose gated frontier is non-empty but dequeues nothing (every
+host out of tokens) skips steps 3-4 and commits through the same block: the
+bucket state, the advanced sketch and an "empty" lineage row.
 
 The reference's analogue of this loop is the fixed 11-stage chain in
 cli/full_pipeline.py:84-215 with a JSON checkpoint after every stage and
@@ -46,6 +51,11 @@ from nightcrawler_ds_pipeline_spark.functions.urls import with_canonical
 # traffic model (single shared definition, see constants.py).
 from nightcrawler_ds_pipeline_spark.constants import RANK_CLICK_SHARES  # noqa: E402
 
+# an outlink inherits its parent's priority times this factor
+OUTLINK_PRIORITY_DECAY = 0.5
+# per-iteration counters: the summary row and the metrics table rows
+COUNTERS = ("dequeued", "results", "new_unique_images", "errors")
+
 
 @dataclass
 class CrawlConfig:
@@ -54,7 +64,6 @@ class CrawlConfig:
     max_per_host: int = politeness.DEFAULT_MAX_PER_HOST
     num_salts: int = politeness.DEFAULT_NUM_SALTS
     bloom_partitions: int = DEFAULT_NUM_PARTITIONS
-    outlink_priority_decay: float = 0.5
     run_ts: str = "1970-01-01_00-00-00"  # injected, never wall-clock
     # TTL re-crawl (reference cache_duration, api_caller.py:24,74: an
     # expired cache entry no longer suppresses the re-fetch). A seen entry
@@ -106,6 +115,20 @@ class CrawlConfig:
 
 
 FRONTIER_COLS = [f.name for f in schemas.FRONTIER.fields]
+RESULT_COLS = [f.name for f in schemas.RESULTS.fields if f.name != "iter"]
+
+
+def _best_per_url(df: DataFrame) -> DataFrame:
+    """One row per url_hash: max priority wins, then the smallest url —
+    deterministic."""
+    w = Window.partitionBy("url_hash").orderBy(
+        F.col("priority").desc(), F.col("url").asc()
+    )
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def seed_frontier(serp: DataFrame) -> DataFrame:
@@ -120,15 +143,7 @@ def seed_frontier(serp: DataFrame) -> DataFrame:
         .withColumn("discovered_iter", F.lit(0).cast("int"))
         .withColumn("parent_url_hash", F.lit(None).cast("long"))
     )
-    # one frontier row per canonical url: max priority wins, deterministic
-    w = Window.partitionBy("url_hash").orderBy(
-        F.col("priority").desc(), F.col("url").asc()
-    )
-    return (
-        seeded.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*FRONTIER_COLS)
-    )
+    return _best_per_url(seeded).select(*FRONTIER_COLS)
 
 
 def _phash_dedup(fetched: DataFrame, history_phash: DataFrame | None) -> DataFrame:
@@ -162,13 +177,36 @@ def _phash_dedup(fetched: DataFrame, history_phash: DataFrame | None) -> DataFra
     return out.unionByName(ko.select(*out.columns))
 
 
-def committed_iter(catalog: SnapshotCatalog, spark: SparkSession) -> int:
-    """Last finalized iteration = max iter in the lineage table, else -1."""
-    lineage = catalog.read(spark, "lineage")
-    if lineage is None:
-        return -1
-    row = lineage.agg(F.max("iter").alias("m")).collect()[0]
-    return int(row["m"]) if row["m"] is not None else -1
+def _next_frontier(gated, batch, deduped, new_seen, seen, it: int) -> DataFrame:
+    """remaining (gated − dequeued) ∪ new outlink edges, one per url.
+
+    Edges come only from successful fetches (the parity oracle skips error
+    responses; an error page's partial outlinks are not crawled) and drop
+    every key of this batch, the still-active seen set and the remaining
+    frontier — one combined anti-join against the union of the three key
+    sets instead of three sequential ones (an anti-join needs no distinct
+    on its right side)."""
+    remaining = gated.select(*FRONTIER_COLS).join(
+        batch.select("url_hash"), "url_hash", "left_anti"
+    )
+    outlinks = (
+        deduped.filter(~F.col("error") & F.col("outlinks").isNotNull())
+        .select(
+            F.col("url_hash").alias("parent_url_hash"),
+            (F.col("priority") * OUTLINK_PRIORITY_DECAY).alias("priority"),
+            F.explode("outlinks").alias("url"),
+        )
+    )
+    edges = (
+        with_canonical(outlinks, "url")
+        .withColumn("discovered_iter", F.lit(it + 1).cast("int"))
+        .select(*FRONTIER_COLS)
+    )
+    exclude = new_seen.select("url_hash").unionByName(remaining.select("url_hash"))
+    if seen is not None:
+        exclude = exclude.unionByName(seen.select("url_hash"))
+    edges = _best_per_url(edges).join(exclude, "url_hash", "left_anti")
+    return remaining.unionByName(edges.select(*FRONTIER_COLS))
 
 
 def _expiring(seen_full, new_seen, it: int, ttl_iters: int | None) -> DataFrame | None:
@@ -204,7 +242,8 @@ def run_crawl(
     robots = spark.read.parquet(f"{fixtures_dir}/robots.parquet")
     images = spark.read.parquet(f"{fixtures_dir}/images.parquet")
 
-    start_iter = committed_iter(catalog, spark) + 1
+    # the commit point: the newest lineage snapshot in the manifest
+    start_iter = catalog.latest_iter("lineage") + 1
     # exact resume: drop any snapshots a crash left behind for iterations
     # whose lineage never committed — otherwise re-running the iteration
     # would append a second copy of its rows
@@ -296,8 +335,8 @@ def run_crawl(
         else:
             robots_cur = robots
         gated = politeness.robots_filter(candidates, robots_cur).cache()
-        # dequeue WITHOUT seq, cache, count — then number with known_count so
-        # big batches take the range-partitioned two-pass path (no global
+        # dequeue, cache, count — then number with the count so big batches
+        # take the range-partitioned two-pass path (no global
         # single-partition window anywhere in the loop)
         pre_batch = politeness.dequeue_gated(
             gated,
@@ -305,12 +344,16 @@ def run_crawl(
             max_per_host=cfg.max_per_host,
             num_salts=cfg.num_salts,
             bucket_state=bucket_state,
-            assign_seq=False,
         ).cache()
         n_batch = pre_batch.count()
-        batch = politeness.assign_global_seq(
-            pre_batch, known_count=n_batch
-        ).cache()
+        # nothing dequeuable and nothing gated: the crawl is done. A gated
+        # frontier that dequeues nothing means slow hosts are merely out of
+        # tokens — the iteration still commits (accrual only) so their
+        # buckets refill; without it hosts with crawl_delay > window starve.
+        if n_batch == 0 and gated.limit(1).count() == 0:
+            _unpersist(pre_batch, gated, rebuilt)
+            break
+        batch = politeness.assign_global_seq(pre_batch, n_batch).cache()
         meta = {"iter": it}
 
         # 5a. new seen rows = everything dequeued this iteration
@@ -341,113 +384,34 @@ def run_crawl(
         # the validity meta travels with the snapshot (freshness check above)
         sk_meta = {**meta, **sk.meta}
 
-        # 5c. token-bucket accounting for the next iteration (an
-        # accrual-only iteration commits it too)
+        # 5c. token-bucket accounting for the next iteration
         new_buckets = politeness.next_bucket_state(
             gated.select("host", "crawl_delay_ms"), batch, bucket_state,
             window_ms=cfg.window_ms,
         )
 
-        if n_batch == 0:
-            # nothing dequeuable. If the gated frontier is empty the crawl
-            # is done; otherwise slow hosts are merely out of tokens — commit
-            # an accrual-only iteration so their buckets refill (without
-            # this, hosts with crawl_delay > window starve forever).
-            if gated.limit(1).count() == 0:
-                _unpersist(batch, pre_batch, gated, rebuilt)
-                break
-            catalog.write(new_buckets, "politeness", mode="overwrite", meta=meta)
-            if next_sketch is not None:
-                catalog.write(next_sketch, sk.table, mode="overwrite", meta=sk_meta)
-            empty_lineage = spark.createDataFrame(
-                [(it, -1, "empty", 0, 0, cfg.run_ts)], schema=schemas.LINEAGE
+        deduped = None
+        if n_batch:
+            # 3. fetch + decode + phash (n_batch proves the broadcast-size gate)
+            fetched = fetch_batch(batch, responses, images, batch_count=n_batch)
+
+            # 4. phash dedup vs history + within-batch
+            history = catalog.read(spark, "results", max_iter=committed)
+            hist_phash = (
+                history.filter(F.col("decode_ok") & ~F.col("is_phash_dup")).select("phash")
+                if history is not None
+                else None
             )
-            catalog.write(empty_lineage, "lineage", mode="append", meta=meta)
-            summary.append(
-                {"iter": it, "dequeued": 0, "results": 0,
-                 "new_unique_images": 0, "errors": 0}
-            )
-            _unpersist(batch, pre_batch, gated, rebuilt)
-            continue
-
-        # 3. fetch + decode + phash (n_batch proves the broadcast-size gate)
-        fetched = fetch_batch(batch, responses, images, batch_count=n_batch)
-
-        # 4. phash dedup vs history + within-batch
-        history = catalog.read(spark, "results", max_iter=committed)
-        hist_phash = (
-            history.filter(F.col("decode_ok") & ~F.col("is_phash_dup")).select("phash")
-            if history is not None
-            else None
-        )
-        # Cached: deduped feeds results AND the outlink edge derivation —
-        # without the cache the frontier write re-runs the whole
-        # fetch+decode chain (measured 2× the fetch cost per iteration).
-        deduped = _phash_dedup(fetched, hist_phash).cache()
-
-        results = deduped.select(
-            F.lit(it).cast("int").alias("iter"),
-            F.col("seq"),
-            F.col("url"),
-            F.col("canonical_url"),
-            F.col("url_hash"),
-            F.col("host"),
-            F.col("error"),
-            F.col("image_id"),
-            F.col("w"),
-            F.col("h"),
-            F.col("fmt"),
-            F.col("caption"),
-            F.col("phash"),
-            F.col("decode_ok"),
-            F.col("is_phash_dup"),
-        )
-
-        # 5d. frontier edges from outlinks; remaining = gated - dequeued + new
-        remaining = gated.select(*FRONTIER_COLS).join(
-            batch.select("url_hash"), "url_hash", "left_anti"
-        )
-
-        # edges come only from successful fetches (the parity oracle skips
-        # error responses; an error page's partial outlinks are not crawled)
-        outlinks = (
-            deduped.filter(~F.col("error") & F.col("outlinks").isNotNull())
-            .select(
-                F.col("url_hash").alias("parent_url_hash"),
-                (F.col("priority") * cfg.outlink_priority_decay).alias("priority"),
-                F.explode("outlinks").alias("url"),
-            )
-        )
-        edges = (
-            with_canonical(outlinks, "url")
-            .withColumn("discovered_iter", F.lit(it + 1).cast("int"))
-            .select(*FRONTIER_COLS)
-        )
-        # drop edges already seen/dequeued; dedup within edges deterministically
-        w_edge = Window.partitionBy("url_hash").orderBy(
-            F.col("priority").desc(), F.col("url").asc()
-        )
-        # one combined anti-join instead of three sequential ones: the
-        # excluded key sets (this batch, still-active seen, remaining
-        # frontier) union into a single bare-key frame first — same result,
-        # two fewer join stages per iteration (an anti-join needs no
-        # distinct on its right side)
-        exclude = new_seen.select("url_hash").unionByName(
-            remaining.select("url_hash")
-        )
-        if seen is not None:
-            exclude = exclude.unionByName(seen.select("url_hash"))
-        edges = (
-            edges.withColumn("__rn", F.row_number().over(w_edge))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .join(exclude, "url_hash", "left_anti")
-        )
-
-        next_frontier = remaining.unionByName(edges.select(*FRONTIER_COLS))
+            # Cached: deduped feeds results AND the outlink edge derivation —
+            # without the cache the frontier write re-runs the whole
+            # fetch+decode chain (measured 2× the fetch cost per iteration).
+            deduped = _phash_dedup(fetched, hist_phash).cache()
+            results = deduped.select(F.lit(it).cast("int").alias("iter"), *RESULT_COLS)
+            # 5d. remaining = gated - dequeued + new edges
+            next_frontier = _next_frontier(gated, batch, deduped, new_seen, seen, it)
 
         # 6. commit snapshots — lineage strictly last (the commit point).
-        # The five non-lineage snapshots are mutually independent once the
+        # The non-lineage snapshots are mutually independent once the
         # shared caches are materialized, and each is a small job whose
         # stragglers leave most of local[N] idle — so materialize the shared
         # lineage ONCE (batch via a cheap count on the cached dequeue,
@@ -460,81 +424,68 @@ def run_crawl(
         # rollback_above on resume, in whatever order it was written.
         batch.count()  # materialize the cached dequeue before fan-out
 
+        counts = dict.fromkeys(COUNTERS, 0)
         with ThreadPoolExecutor(max_workers=4) as pool:
             # EARLY writes — depend only on the just-materialized batch /
             # gated caches, so they overlap the metrics aggregate below
-            # (which runs the whole fetch+decode chain)
-            futures = [
-                pool.submit(
-                    catalog.write, new_buckets, "politeness",
-                    mode="overwrite", meta=meta,
-                ),
-                pool.submit(
-                    catalog.write, new_seen, "seen", mode="append", meta=meta
-                ),
-            ]
+            # (which runs the whole fetch+decode chain). Each entry is
+            # (df, table, mode, meta) in SnapshotCatalog.write order.
+            early = [(new_buckets, "politeness", "overwrite", meta)]
+            if n_batch:
+                early.append((new_seen, "seen", "append", meta))
             if next_sketch is not None:
-                futures.append(
-                    pool.submit(
-                        catalog.write, next_sketch, sk.table,
-                        mode="overwrite", meta=sk_meta,
-                    )
-                )
+                early.append((next_sketch, sk.table, "overwrite", sk_meta))
+            futures = [pool.submit(catalog.write, *w) for w in early]
 
-            # one-pass metrics aggregate (vs one action per counter); also
-            # materializes the deduped cache that results/frontier read —
-            # it must run BEFORE those writes are submitted (two concurrent
-            # consumers of a not-yet-materialized cache would both compute)
-            mrow = deduped.agg(
-                F.count("*").alias("n_results"),
-                F.sum(
-                    F.when(
-                        F.col("decode_ok") & ~F.col("is_phash_dup"), 1
-                    ).otherwise(0)
-                ).alias("n_new_images"),
-                F.sum(
-                    F.when(F.col("error") | ~F.col("decode_ok"), 1).otherwise(0)
-                ).alias("n_errors"),
-            ).collect()[0]
-            n_results = int(mrow["n_results"])
-            n_new_images = int(mrow["n_new_images"] or 0)
-            n_errors = int(mrow["n_errors"] or 0)
-            metrics = spark.createDataFrame(
-                [
-                    (it, "dequeued", n_batch, None),
-                    (it, "results", n_results, None),
-                    (it, "new_unique_images", n_new_images, None),
-                    (it, "errors", n_errors, None),
-                ],
-                schema=schemas.METRICS,
-            )
-            futures += [
-                pool.submit(
-                    catalog.write, results, "results", mode="append", meta=meta
-                ),
-                pool.submit(
-                    catalog.write, next_frontier, "frontier",
-                    mode="overwrite", meta=meta,
-                ),
-                pool.submit(
-                    catalog.write, metrics, "metrics", mode="append", meta=meta
-                ),
-            ]
+            if n_batch:
+                # one-pass metrics aggregate (vs one action per counter);
+                # also materializes the deduped cache that results/frontier
+                # read — it must run BEFORE those writes are submitted (two
+                # concurrent consumers of a not-yet-materialized cache would
+                # both compute)
+                mrow = deduped.agg(
+                    F.count("*").alias("results"),
+                    F.sum(
+                        F.when(
+                            F.col("decode_ok") & ~F.col("is_phash_dup"), 1
+                        ).otherwise(0)
+                    ).alias("new_unique_images"),
+                    F.sum(
+                        F.when(F.col("error") | ~F.col("decode_ok"), 1).otherwise(0)
+                    ).alias("errors"),
+                ).collect()[0]
+                counts.update({k: int(v or 0) for k, v in mrow.asDict().items()})
+                counts["dequeued"] = n_batch
+                metrics = spark.createDataFrame(
+                    [(it, k, v, None) for k, v in counts.items()],
+                    schema=schemas.METRICS,
+                )
+                late = [
+                    (results, "results", "append", meta),
+                    (next_frontier, "frontier", "overwrite", meta),
+                    (metrics, "metrics", "append", meta),
+                ]
+                futures += [pool.submit(catalog.write, *w) for w in late]
             for f in futures:
                 f.result()  # surface any write error BEFORE the commit point
 
-        lineage = (
-            deduped.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows_out"))
-            .select(
-                F.lit(it).cast("int").alias("iter"),
-                F.col("partition_id").cast("int"),
-                F.lit("fetch").alias("stage"),
-                F.lit(n_batch).cast("long").alias("rows_in"),
-                F.col("rows_out").cast("long"),
-                F.lit(cfg.run_ts).alias("run_ts"),
+        if n_batch:
+            lineage = (
+                deduped.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(F.count("*").alias("rows_out"))
+                .select(
+                    F.lit(it).cast("int").alias("iter"),
+                    F.col("partition_id").cast("int"),
+                    F.lit("fetch").alias("stage"),
+                    F.lit(n_batch).cast("long").alias("rows_in"),
+                    F.col("rows_out").cast("long"),
+                    F.lit(cfg.run_ts).alias("run_ts"),
+                )
             )
-        )
+        else:
+            lineage = spark.createDataFrame(
+                [(it, -1, "empty", 0, 0, cfg.run_ts)], schema=schemas.LINEAGE
+            )
         catalog.write(lineage, "lineage", mode="append", meta=meta)  # COMMIT
 
         # post-commit maintenance: compaction rewrites only FINALIZED state
@@ -545,15 +496,7 @@ def run_crawl(
             catalog.compact(spark, "results")
 
         seen_count += n_batch
-        summary.append(
-            {
-                "iter": it,
-                "dequeued": n_batch,
-                "results": n_results,
-                "new_unique_images": n_new_images,
-                "errors": n_errors,
-            }
-        )
+        summary.append({"iter": it, **counts})
         _unpersist(batch, pre_batch, deduped, gated, rebuilt)
 
     return {"start_iter": start_iter, "iterations": summary}

@@ -12,13 +12,16 @@ Mechanics:
 - budget: floor(available / crawl_delay_ms) clamped to [0, max_per_host],
   delay ≤ 0 → max_per_host, from the accrued token level
   (`token_bucket_cols`, the one definition of the bucket arithmetic).
-- dequeue: top-budget URLs per host by (priority desc, url_hash asc) — a
-  deterministic total order (SURVEY.md §7 hard-point a). Implemented as
-  TWO-PHASE top-K so one hot host can't serialize a shuffle partition
-  (hard-point b): phase 1 ranks within (host, salt) buckets and keeps at
-  most `budget` per bucket; phase 2 re-ranks the ≤ budget×num_salts
-  survivors per host. Budgets are computed on the TRUE host before salting,
-  so splitting never inflates a host's allowance.
+- dequeue (`dequeue_gated`, over the `robots_filter` output): top-budget
+  URLs per host by (priority desc, url_hash asc) — a deterministic total
+  order (SURVEY.md §7 hard-point a). Implemented as TWO-PHASE top-K so one
+  hot host can't serialize a shuffle partition (hard-point b): phase 1
+  ranks within (host, salt) buckets and keeps at most `budget` per bucket;
+  phase 2 re-ranks the ≤ budget×num_salts survivors per host. Budgets are
+  computed on the TRUE host before salting, so splitting never inflates a
+  host's allowance.
+- crawl order (`assign_global_seq`): the dequeued batch numbered 1..n in
+  the same total order, given the batch's count.
 """
 
 from __future__ import annotations
@@ -30,6 +33,10 @@ DEFAULT_WINDOW_MS = 60_000
 DEFAULT_MAX_PER_HOST = 100
 DEFAULT_NUM_SALTS = 8
 DEFAULT_CRAWL_DELAY_MS = 1000
+# assign_global_seq: batches up to this many rows are numbered in one range
+# partition; larger ones in RANGE_PARTITIONS
+SINGLE_WINDOW_MAX = 100_000
+RANGE_PARTITIONS = 256
 
 
 def robots_filter(frontier: DataFrame, robots: DataFrame) -> DataFrame:
@@ -73,45 +80,20 @@ def token_bucket_cols(tokens_ms, window_ms: int, max_per_host: int = DEFAULT_MAX
     return available, budget
 
 
-def host_budget_col(window_ms: int, max_per_host: int):
-    """tokens = clamp(floor(window_ms / crawl_delay_ms), 0, max_per_host):
-    the budget of a host with no accrued tokens."""
-    return token_bucket_cols(F.lit(0), window_ms, max_per_host)[1]
-
-
-def dequeue(
-    frontier: DataFrame,
-    robots: DataFrame,
-    window_ms: int = DEFAULT_WINDOW_MS,
-    max_per_host: int = DEFAULT_MAX_PER_HOST,
-    num_salts: int = DEFAULT_NUM_SALTS,
-    bucket_state: DataFrame | None = None,
-) -> DataFrame:
-    """robots gate + `dequeue_gated` (see there)."""
-    return dequeue_gated(
-        robots_filter(frontier, robots),
-        window_ms=window_ms,
-        max_per_host=max_per_host,
-        num_salts=num_salts,
-        bucket_state=bucket_state,
-    )
-
-
 def dequeue_gated(
     gated: DataFrame,
     window_ms: int = DEFAULT_WINDOW_MS,
     max_per_host: int = DEFAULT_MAX_PER_HOST,
     num_salts: int = DEFAULT_NUM_SALTS,
     bucket_state: DataFrame | None = None,
-    assign_seq: bool = True,
 ) -> DataFrame:
     """Politeness-budgeted deterministic dequeue of the next fetch batch,
-    over an already robots-gated frontier (callers that need the gated set
-    for other purposes — remaining-frontier rewrite, bucket accounting —
-    compute it once and pass it here).
+    over an already robots-gated frontier (`robots_filter`; callers that
+    need the gated set for other purposes — remaining-frontier rewrite,
+    bucket accounting — compute it once and pass it here).
 
-    Output = frontier columns + crawl_delay_ms, host_budget, seq (global
-    deterministic crawl order within the iteration).
+    Output = frontier columns + crawl_delay_ms, host_budget; number it with
+    `assign_global_seq` once its count is known.
 
     With ``bucket_state`` (host, tokens_ms — persisted between iterations),
     budgets come from the accrued token level: available = min(cap,
@@ -122,12 +104,11 @@ def dequeue_gated(
     if bucket_state is not None:
         state = bucket_state.select("host", "tokens_ms")
         gated = gated.join(F.broadcast(state), "host", "left")
-        _, budget = token_bucket_cols(F.col("tokens_ms"), window_ms, max_per_host)
-        gated = gated.withColumn("host_budget", budget).drop("tokens_ms")
     else:
-        gated = gated.withColumn(
-            "host_budget", host_budget_col(window_ms, max_per_host)
-        )
+        # no stored levels: null tokens = a host's first window
+        gated = gated.withColumn("tokens_ms", F.lit(None).cast("long"))
+    _, budget = token_bucket_cols(F.col("tokens_ms"), window_ms, max_per_host)
+    gated = gated.withColumn("host_budget", budget).drop("tokens_ms")
 
     # phase 1: per-(host, salt) top-budget — spreads hot hosts across tasks
     salted = gated.withColumn(
@@ -146,27 +127,17 @@ def dequeue_gated(
     w2 = Window.partitionBy("host").orderBy(
         F.col("priority").desc(), F.col("url_hash").asc()
     )
-    batch = (
+    return (
         survivors.withColumn("__r2", F.row_number().over(w2))
         .filter(F.col("__r2") <= F.col("host_budget"))
         .drop("__r2")
     )
 
-    # deterministic global crawl order for the (bounded) dequeued batch.
-    # Callers that already count the batch (the crawl loop does, to cache
-    # before the count) pass assign_seq=False and call assign_global_seq
-    # themselves with known_count — that engages the range-partitioned
-    # two-pass numbering above the threshold instead of one global window.
-    if not assign_seq:
-        return batch
-    return assign_global_seq(batch)
-
 
 def assign_global_seq(
     batch: DataFrame,
-    single_window_threshold: int = 100_000,
-    known_count: int | None = None,
-    num_range_partitions: int = 256,
+    count: int,
+    single_window_threshold: int = SINGLE_WINDOW_MAX,
 ) -> DataFrame:
     """Global dense 1..n ``seq`` by (priority desc, url_hash asc).
 
@@ -174,20 +145,21 @@ def assign_global_seq(
     number rows within each sorted partition, then add per-partition offsets
     (a classic zipWithIndex): no single-task stage ever sees the whole batch
     and no plan node is an UNPARTITIONED window (the WindowExec "No
-    Partition Defined" scale hazard). Small batches (or unknown counts) use
-    ONE range partition — same execution shape as a global sort, but the
-    per-partition window still carries a defined partition spec. seq is a
+    Partition Defined" scale hazard). Batches of at most
+    ``single_window_threshold`` rows use ONE range partition — same
+    execution shape as a global sort, but the per-partition window still
+    carries a defined partition spec; larger ones use RANGE_PARTITIONS. seq is a
     pure function of the data: range boundaries only decide which partition
     a row lands in, and offsets are computed from the partitions actually
     produced, so the numbering equals the global rank in the total order
     regardless of sampling (url_hash is unique within a batch — total
-    order, no boundary ties)."""
+    order, no boundary ties).
+
+    ``count`` is the caller's row count of ``batch`` (the crawl loop counts
+    its cached dequeue anyway): no eager count here, which would recompute
+    the dequeue windows before the caller can cache."""
     order = [F.col("priority").desc(), F.col("url_hash").asc()]
-    # No eager count here — an extra action would recompute the dequeue
-    # windows before the caller can cache. Callers with huge batches pass
-    # known_count to opt into parallel numbering (the crawl loop always does).
-    if known_count is None or known_count <= single_window_threshold:
-        num_range_partitions = 1
+    num_range_partitions = 1 if count <= single_window_threshold else RANGE_PARTITIONS
     ranged = (
         batch.repartitionByRange(num_range_partitions, *order)
         .sortWithinPartitions(*order)
@@ -206,7 +178,7 @@ def assign_global_seq(
             "__pid", "__local"
         )
     # offsets: cumulative count of lower-pid partitions, via a ≤P×P self-join
-    # on the ≤P-row counts frame (P ≤ 256) — windowless by design
+    # on the ≤P-row counts frame (P = RANGE_PARTITIONS) — windowless by design
     counts = with_local.groupBy("__pid").agg(F.count("*").alias("__cnt"))
     lower = counts.select(
         F.col("__pid").alias("__lo_pid"), F.col("__cnt").alias("__lo_cnt")

@@ -14,7 +14,7 @@ snapshots, metadata-level partition pruning); the jars are not in this
 container, so ``IcebergCatalog`` raises unless the runtime has them, and
 ``SnapshotCatalog`` provides the same commit semantics on plain parquet.
 Every snapshot carries a ``meta`` dict — the crawl loop tags snapshots with
-their iteration id and readers filter ``meta["iter"] <= committed_iter``,
+their iteration id and readers filter ``meta["iter"] <= committed``,
 which is how un-finalized iterations are rolled back for free.
 """
 
@@ -99,9 +99,10 @@ class SnapshotCatalog:
 
     def latest_iter(self, table: str, max_iter: int | None = None) -> int:
         """Max ``meta.iter`` among committed snapshots (``<= max_iter`` when
-        given), or -1 if none — manifest-only, no data scan. Used by the
-        crawl loop to detect a stale Bloom snapshot (older than the seen
-        table it must over-approximate)."""
+        given), or -1 if none — manifest-only, no data scan. The crawl
+        loop's commit point is ``latest_iter("lineage")``; it also detects
+        a stale sketch snapshot (older than the seen table it must
+        over-approximate)."""
         snaps = self._load_manifest(table)
         if max_iter is not None:
             snaps = [s for s in snaps if s["meta"].get("iter", -1) <= max_iter]
@@ -205,12 +206,8 @@ class SnapshotCatalog:
         first finalizer, or a resume rollback) caps the window at -1 — an
         unbounded window there would ingest exactly the orphan appends
         ``rollback_above`` is about to delete."""
-        if until_iter is None:
-            if os.path.isdir(self._table_dir("lineage")):
-                lineage = self._load_manifest("lineage")
-                until_iter = max(
-                    (s["meta"].get("iter", -1) for s in lineage), default=-1
-                )
+        if until_iter is None and os.path.isdir(self._table_dir("lineage")):
+            until_iter = self.latest_iter("lineage")
         snaps = self._load_manifest(table)
         window = [
             s
@@ -239,10 +236,8 @@ class SnapshotCatalog:
         snapshots for an iteration whose lineage (the finalizer) never
         landed; without this, re-running the iteration would append a second
         copy and duplicate rows forever."""
-        import os as _os
-
-        for table in list(_os.listdir(self.root)):
-            if not _os.path.isdir(self._table_dir(table)):
+        for table in list(os.listdir(self.root)):
+            if not os.path.isdir(self._table_dir(table)):
                 continue
             snaps = self._load_manifest(table)
             keep = [s for s in snaps if s["meta"].get("iter", -1) <= max_iter]

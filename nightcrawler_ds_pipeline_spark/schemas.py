@@ -89,18 +89,6 @@ SEEN = T.StructType(
     ]
 )
 
-# Partitioned Bloom sketches persisted between iterations:
-# partition p = pmod(url_hash, num_partitions).
-BLOOM = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("num_bits", T.LongType(), False),
-        T.StructField("num_hashes", T.IntegerType(), False),
-        T.StructField("bitset", T.BinaryType(), False),
-        T.StructField("num_items", T.LongType(), False),
-    ]
-)
-
 # robots.txt politeness cache (north_rule): crawl-delay token buckets.
 ROBOTS = T.StructType(
     [

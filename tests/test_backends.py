@@ -73,7 +73,8 @@ def test_diffbot_through_fetch_batch(spark, t1_dir):
                 "image_url string, keyword_enriched string, keyword_volume double, "
                 "keyword_language string, keyword_location string",
             )
-        )
+        ),
+        1,
     )
     raw = spark.createDataFrame(_diffbot_rows(), DIFFBOT_SCHEMA)
     fetched = fetch_batch(batch, raw, images, backend="diffbot").collect()

@@ -3,7 +3,7 @@
 import pyspark.sql.functions as F
 import pytest
 
-from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl, committed_iter
+from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl
 from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
 
 
@@ -105,7 +105,7 @@ def test_corrupt_bytes_become_error_rows(crawl_state, spark):
 
 def test_lineage_commit_and_resume_noop(crawl_state, spark, t1_dir):
     catalog, summary, cfg = crawl_state
-    done = committed_iter(catalog, spark)
+    done = catalog.latest_iter("lineage")
     assert done == summary["iterations"][-1]["iter"]
     # resume with same config → nothing new to do
     again = run_crawl(spark, catalog, t1_dir, cfg)

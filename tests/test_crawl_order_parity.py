@@ -5,7 +5,11 @@ decoded dims/phash match the stored truth and captions are byte-equal."""
 
 import pyspark.sql.functions as F
 
-from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl
+from nightcrawler_ds_pipeline_spark.crawl.loop import (
+    OUTLINK_PRIORITY_DECAY,
+    CrawlConfig,
+    run_crawl,
+)
 from nightcrawler_ds_pipeline_spark.crawl.reference_crawl_oracle import (
     run_crawl_oracle,
 )
@@ -53,7 +57,7 @@ def test_crawl_order_and_seen_set_match_oracle(spark, t1_dir, tmp_path):
         iterations=cfg.iterations,
         window_ms=cfg.window_ms,
         max_per_host=cfg.max_per_host,
-        outlink_priority_decay=cfg.outlink_priority_decay,
+        outlink_priority_decay=OUTLINK_PRIORITY_DECAY,
     )
     assert spark_seen == oracle.seen, (
         f"seen-set mismatch: spark-only={list(spark_seen - oracle.seen)[:5]} "
@@ -95,7 +99,7 @@ def test_crawl_order_parity_with_ttl(spark, t1_dir, tmp_path):
         serp_rows, resp_rows, robots_rows, _hash_map(spark, all_urls),
         iterations=cfg.iterations, window_ms=cfg.window_ms,
         max_per_host=cfg.max_per_host,
-        outlink_priority_decay=cfg.outlink_priority_decay,
+        outlink_priority_decay=OUTLINK_PRIORITY_DECAY,
         ttl_iters=cfg.ttl_iters,
     )
     assert spark_order == sorted(oracle.crawl_order)

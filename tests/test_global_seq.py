@@ -16,9 +16,9 @@ def _mk(spark, n=5000):
 
 def test_two_pass_equals_window(spark):
     df = _mk(spark)
-    small = assign_global_seq(df)
-    # force two-pass by declaring a known count above the threshold
-    large = assign_global_seq(df, single_window_threshold=1, known_count=5000)
+    small = assign_global_seq(df, 5000)
+    # force two-pass by a count above the threshold
+    large = assign_global_seq(df, 5000, single_window_threshold=1)
     a = {r["url_hash"]: r["seq"] for r in small.collect()}
     b = {r["url_hash"]: r["seq"] for r in large.collect()}
     assert a == b
@@ -34,7 +34,7 @@ def test_two_pass_equals_window(spark):
 
 
 def test_loop_wiring_engages_two_pass(spark):
-    """The loop-style call (dequeue without seq → count → known_count) must
+    """The loop-style call (dequeue without seq → count → number) must
     hit the range-partitioned path above the threshold and still produce the
     exact dense order; below it, the constant-key single window. Neither
     plan may contain an UNDEFINED window partitioning (the WindowExec scale
@@ -49,11 +49,11 @@ def test_loop_wiring_engages_two_pass(spark):
         F.concat(F.lit("h"), (F.col("id") % 7).cast("string")).alias("host"),
         F.lit(0).alias("crawl_delay_ms"),
     )
-    pre = dequeue_gated(df, max_per_host=1000, assign_seq=False)
+    pre = dequeue_gated(df, max_per_host=1000)
     assert "seq" not in pre.columns
     n = pre.count()
-    two_pass = assign_global_seq(pre, single_window_threshold=100, known_count=n)
-    one_pass = assign_global_seq(pre)
+    two_pass = assign_global_seq(pre, n, single_window_threshold=100)
+    one_pass = assign_global_seq(pre, n)
     a = {r["url_hash"]: r["seq"] for r in two_pass.collect()}
     b = {r["url_hash"]: r["seq"] for r in one_pass.collect()}
     assert a == b and sorted(a.values()) == list(range(1, n + 1))

@@ -2,9 +2,12 @@
 must roll back cleanly; the resumed run must equal an uninterrupted run."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl
 from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
+
+T1_CFG = dict(max_per_host=10, window_ms=10_000)
 
 
 def _final_state(spark, catalog):
@@ -18,18 +21,21 @@ def _final_state(spark, catalog):
     return order, seen_set
 
 
-def test_resume_after_simulated_crash(spark, t1_dir, tmp_path):
-    cfg = CrawlConfig(iterations=3, max_per_host=10, window_ms=10_000)
+@pytest.fixture(scope="module")
+def golden(spark, t1_dir, tmp_path_factory):
+    """Final state of an uninterrupted 3-iteration t1 crawl."""
+    cat = SnapshotCatalog(str(tmp_path_factory.mktemp("golden")))
+    run_crawl(spark, cat, t1_dir, CrawlConfig(iterations=3, **T1_CFG))
+    return _final_state(spark, cat)
 
-    # clean uninterrupted run
-    cat_a = SnapshotCatalog(str(tmp_path / "a"))
-    run_crawl(spark, cat_a, t1_dir, cfg)
-    golden = _final_state(spark, cat_a)
+
+def test_resume_after_simulated_crash(spark, t1_dir, tmp_path, golden):
+    cfg = CrawlConfig(iterations=3, **T1_CFG)
 
     # interrupted run: stop after iteration 0, then simulate a crash during
     # iteration 1 — some snapshots committed but lineage (the finalizer) not
     cat_b = SnapshotCatalog(str(tmp_path / "b"))
-    run_crawl(spark, cat_b, t1_dir, CrawlConfig(iterations=1, max_per_host=10, window_ms=10_000))
+    run_crawl(spark, cat_b, t1_dir, CrawlConfig(iterations=1, **T1_CFG))
     junk = spark.range(7).select(
         F.lit(1).cast("int").alias("iter"),
         (F.col("id") + 1).alias("seq"),
@@ -68,6 +74,48 @@ def test_resume_after_simulated_crash(spark, t1_dir, tmp_path):
     # seen table also clean of orphans
     seen = cat_b.read(spark, "seen")
     assert seen.count() == seen.select("url_hash").distinct().count()
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+class _CrashingCatalog(SnapshotCatalog):
+    """Raises on ``table``'s write at iteration ``at_iter``: after the
+    snapshot commits (an orphan lands) for every table but lineage, before
+    it for lineage (the commit point never lands)."""
+
+    def __init__(self, root, table, at_iter):
+        super().__init__(root)
+        self.table, self.at_iter = table, at_iter
+
+    def write(self, df, table, mode="append", meta=None, *args, **kwargs):
+        crash = table == self.table and (meta or {}).get("iter") == self.at_iter
+        if crash and table == "lineage":
+            raise _Crash(table)
+        out = super().write(df, table, mode, meta, *args, **kwargs)
+        if crash:
+            raise _Crash(table)
+        return out
+
+
+@pytest.mark.parametrize("table", ["politeness", "results", "lineage"])
+def test_resume_after_crash_inside_commit_block(spark, t1_dir, tmp_path, golden, table):
+    """A crash at an early pool write, a late pool write or the lineage
+    commit of iteration 1 leaves iteration 0 as the commit point; resuming
+    with a plain catalog equals the uninterrupted run."""
+    cfg = CrawlConfig(iterations=3, **T1_CFG)
+    root = str(tmp_path / "crash")
+    crashing = _CrashingCatalog(root, table, at_iter=1)
+    with pytest.raises(_Crash):
+        run_crawl(spark, crashing, t1_dir, cfg)
+    assert crashing.latest_iter("lineage") == 0
+    if table != "lineage":
+        assert crashing.latest_iter(table) == 1  # the orphan landed
+
+    out = run_crawl(spark, SnapshotCatalog(root), t1_dir, cfg)
+    assert out["start_iter"] == 1
+    assert _final_state(spark, SnapshotCatalog(root)) == golden
 
 
 def test_resume_across_bloom_partition_upgrade(spark, tmp_path, t1_dir):

@@ -7,7 +7,11 @@ import shutil
 
 import pyspark.sql.functions as F
 
-from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl
+from nightcrawler_ds_pipeline_spark.crawl.loop import (
+    OUTLINK_PRIORITY_DECAY,
+    CrawlConfig,
+    run_crawl,
+)
 from nightcrawler_ds_pipeline_spark.crawl.reference_crawl_oracle import (
     run_crawl_oracle,
 )
@@ -66,7 +70,20 @@ def test_slow_host_accrues_and_matches_oracle(spark, t1_dir, tmp_path):
     serp, responses, robots = _mk_fixtures(spark, t1_dir, fx)
     cfg = CrawlConfig(iterations=6, max_per_host=10, window_ms=10_000)
     catalog = SnapshotCatalog(str(tmp_path / "cat"))
-    run_crawl(spark, catalog, fx, cfg)
+    summary = run_crawl(spark, catalog, fx, cfg)
+
+    # an accrual-only iteration (every gated host out of tokens) commits the
+    # bucket state and its lineage row, and nothing else
+    accrual = [r["iter"] for r in summary["iterations"] if r["dequeued"] == 0]
+    assert accrual, "the fixture never starved every host of tokens"
+    snap_iters = {
+        t: {s["meta"]["iter"] for s in catalog.snapshots(t)}
+        for t in ("politeness", "lineage", "seen", "results", "frontier", "metrics")
+    }
+    for it in accrual:
+        assert it in snap_iters["politeness"] and it in snap_iters["lineage"]
+        for t in ("seen", "results", "frontier", "metrics"):
+            assert it not in snap_iters[t], (it, t)
 
     results = catalog.read(spark, "results")
     # the slow host (budget floor 0 in iter 0, accrual after) IS crawled
@@ -95,7 +112,7 @@ def test_slow_host_accrues_and_matches_oracle(spark, t1_dir, tmp_path):
         serp_rows, resp_rows, robots_rows, hmap,
         iterations=cfg.iterations, window_ms=cfg.window_ms,
         max_per_host=cfg.max_per_host,
-        outlink_priority_decay=cfg.outlink_priority_decay,
+        outlink_priority_decay=OUTLINK_PRIORITY_DECAY,
     )
     spark_order = sorted(
         (r["iter"], r["seq"], r["url_hash"])

@@ -56,7 +56,6 @@ def _batch_reference(spark):
             window_ms=WINDOW_MS,
             max_per_host=MAX_PER_HOST,
             bucket_state=state,
-            assign_seq=False,
         )
         out |= {
             (r["iter"], r["host"], r["url_hash"]) for r in batch.collect()

@@ -30,14 +30,18 @@ def tiny(spark):
     return frontier, robots
 
 
+def _dequeue(frontier, robots, **kw):
+    return politeness.dequeue_gated(politeness.robots_filter(frontier, robots), **kw)
+
+
 def test_budget_from_accrued_tokens(spark, tiny):
     frontier, robots = tiny
     # no state: slow.host gets window/delay = 10000/5000 = 2
-    b0 = politeness.dequeue(frontier, robots, window_ms=10_000, max_per_host=100)
+    b0 = _dequeue(frontier, robots, window_ms=10_000, max_per_host=100)
     assert b0.filter(F.col("host") == "slow.host").count() == 2
     # with accrued 10s of tokens: available = 20s → budget 4
     state = spark.createDataFrame([("slow.host", 10_000)], "host string, tokens_ms long")
-    b1 = politeness.dequeue(
+    b1 = _dequeue(
         frontier, robots, window_ms=10_000, max_per_host=100, bucket_state=state
     )
     assert b1.filter(F.col("host") == "slow.host").count() == 4
@@ -48,7 +52,7 @@ def test_budget_from_accrued_tokens(spark, tiny):
 def test_tokens_capped_at_two_windows(spark, tiny):
     frontier, robots = tiny
     state = spark.createDataFrame([("slow.host", 10_000_000)], "host string, tokens_ms long")
-    b = politeness.dequeue(
+    b = _dequeue(
         frontier, robots, window_ms=10_000, max_per_host=100, bucket_state=state
     )
     # available capped at 2×window = 20s → budget 4, not 2000
@@ -57,7 +61,7 @@ def test_tokens_capped_at_two_windows(spark, tiny):
 
 def test_next_state_accounting(spark, tiny):
     frontier, robots = tiny
-    batch = politeness.dequeue(frontier, robots, window_ms=10_000, max_per_host=100)
+    batch = _dequeue(frontier, robots, window_ms=10_000, max_per_host=100)
     gated = politeness.robots_filter(frontier, robots).select("host", "crawl_delay_ms")
     state1 = politeness.next_bucket_state(gated, batch, None, window_ms=10_000)
     rows = {r["host"]: r["tokens_ms"] for r in state1.collect()}
@@ -69,7 +73,7 @@ def test_next_state_accounting(spark, tiny):
 
 def test_absent_host_state_carries_forward(spark, tiny):
     frontier, robots = tiny
-    batch = politeness.dequeue(frontier, robots, window_ms=10_000, max_per_host=100)
+    batch = _dequeue(frontier, robots, window_ms=10_000, max_per_host=100)
     gated = politeness.robots_filter(frontier, robots).select("host", "crawl_delay_ms")
     prev = spark.createDataFrame(
         [("gone.host", 7_500)], "host string, tokens_ms long"
@@ -80,10 +84,10 @@ def test_absent_host_state_carries_forward(spark, tiny):
 
 
 def test_bucket_columns_match_scalar_compute_budget(spark):
-    """The Column token bucket (dequeue_gated, next_bucket_state,
-    host_budget_col) and the scalar one the streaming dequeue uses are one
-    definition: equal over a grid with delay ≤ 0, delay > window, negative,
-    missing and over-cap token levels."""
+    """The Column token bucket (dequeue_gated, next_bucket_state) and the
+    scalar one the streaming dequeue uses are one definition: equal over a
+    grid with delay ≤ 0, delay > window, negative, missing (a host's first
+    window) and over-cap token levels."""
     from nightcrawler_ds_pipeline_spark.streaming.politeness_stream import (
         compute_budget,
     )
@@ -104,11 +108,9 @@ def test_bucket_columns_match_scalar_compute_budget(spark):
                 "crawl_delay_ms",
                 available.alias("available"),
                 budget.alias("budget"),
-                politeness.host_budget_col(window_ms, max_per_host).alias("fresh"),
             ).collect()
             assert len(rows) == len(tokens) * len(delays)
             for r in rows:
                 t, d = r["tokens_ms"], r["crawl_delay_ms"]
                 want = compute_budget(t or 0, d, window_ms, max_per_host)
                 assert (r["available"], r["budget"]) == want, (window_ms, max_per_host, t, d)
-                assert r["fresh"] == compute_budget(0, d, window_ms, max_per_host)[1]
