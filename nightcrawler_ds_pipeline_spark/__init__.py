@@ -27,7 +27,6 @@ def __getattr__(name):  # lazy top-level API (avoids importing Spark at pkg impo
         "SnapshotCatalog": (
             "nightcrawler_ds_pipeline_spark.crawl.tables", "SnapshotCatalog"
         ),
-        "get_catalog": ("nightcrawler_ds_pipeline_spark.crawl.tables", "get_catalog"),
         "get_spark": ("nightcrawler_ds_pipeline_spark.session", "get_spark"),
         "parse_robots": (
             "nightcrawler_ds_pipeline_spark.functions.robots", "parse_robots"

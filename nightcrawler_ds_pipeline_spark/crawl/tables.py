@@ -10,12 +10,20 @@ checkpoints; reference analogue: the per-stage JSON checkpoints at
 base.py:285-309 and file resume at helpers/utils_io.py:20-51).
 
 On a real cluster this layer is Apache Iceberg (append / overwrite
-snapshots, metadata-level partition pruning); the jars are not in this
-container, so ``IcebergCatalog`` raises unless the runtime has them, and
-``SnapshotCatalog`` provides the same commit semantics on plain parquet.
-Every snapshot carries a ``meta`` dict — the crawl loop tags snapshots with
-their iteration id and readers filter ``meta["iter"] <= committed``,
-which is how un-finalized iterations are rolled back for free.
+snapshots, metadata-level partition pruning); ``SnapshotCatalog`` provides
+the same commit semantics on plain parquet. Every snapshot carries a
+``meta`` dict — the crawl loop tags snapshots with their iteration id and
+readers filter ``meta["iter"] <= committed``, which is how un-finalized
+iterations are rolled back for free.
+
+Each entry also records its ``schema`` string; a scan merges parquet
+footers (``mergeSchema``: additive evolution, old rows read NULL for a new
+column) only when the entries it reads hold more than one schema (entries
+without one count as the same unknown schema). Every manifest
+read-modify-write of a table holds that table's re-entrant lock, so
+concurrent writers of one table never lose a commit while writers of
+different tables run in parallel. The lock is in-process only: two
+processes must not write one table.
 """
 
 from __future__ import annotations
@@ -23,6 +31,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +43,7 @@ class SnapshotCatalog:
 
     def __init__(self, root: str):
         self.root = root
+        self._locks: dict[str, threading.RLock] = {}
         os.makedirs(root, exist_ok=True)
 
     # -- manifest helpers ---------------------------------------------------
@@ -41,6 +52,9 @@ class SnapshotCatalog:
 
     def _manifest_path(self, table: str) -> str:
         return os.path.join(self._table_dir(table), "_snapshots.json")
+
+    def _lock(self, table: str) -> threading.RLock:
+        return self._locks.setdefault(table, threading.RLock())
 
     def _load_manifest(self, table: str) -> list[dict]:
         path = self._manifest_path(table)
@@ -55,6 +69,18 @@ class SnapshotCatalog:
         with open(tmp, "w") as f:
             json.dump(snapshots, f, indent=1)
         os.replace(tmp, path)  # atomic commit point
+
+    def _snaps(
+        self, table: str, max_iter: int | None = None, as_of: int | None = None
+    ) -> list[dict]:
+        """Committed entries in commit order, with ``meta.iter <= max_iter``
+        (no ``iter`` counts as -1) and ``id <= as_of`` when given."""
+        return [
+            s
+            for s in self._load_manifest(table)
+            if (max_iter is None or s["meta"].get("iter", -1) <= max_iter)
+            and (as_of is None or s["id"] <= as_of)
+        ]
 
     # -- public API ---------------------------------------------------------
     def write(
@@ -78,20 +104,22 @@ class SnapshotCatalog:
             raise ValueError(f"bad mode {mode!r}")
         tdir = self._table_dir(table)
         os.makedirs(tdir, exist_ok=True)
-        snapshots = self._load_manifest(table)
-        snap_id = (snapshots[-1]["id"] + 1) if snapshots else 0
-        data_dir = os.path.join(tdir, f"snap-{snap_id:06d}-{uuid.uuid4().hex[:8]}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        entry = {"id": snap_id, "dir": data_dir, "mode": mode, "meta": meta or {}}
-        if stats_cols:
-            stats = _footer_stats(data_dir, stats_cols)
-            if stats:
-                entry["stats"] = stats
-        snapshots.append(entry)
-        self._commit_manifest(table, snapshots)
+        with self._lock(table):
+            snapshots = self._load_manifest(table)
+            snap_id = (snapshots[-1]["id"] + 1) if snapshots else 0
+            data_dir = os.path.join(tdir, f"snap-{snap_id:06d}-{uuid.uuid4().hex[:8]}")
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(data_dir)
+            entry = {"id": snap_id, "dir": data_dir, "mode": mode,
+                     "meta": meta or {}, "schema": df.schema.simpleString()}
+            if stats_cols:
+                stats = _footer_stats(data_dir, stats_cols)
+                if stats:
+                    entry["stats"] = stats
+            snapshots.append(entry)
+            self._commit_manifest(table, snapshots)
         return snap_id
 
     def snapshots(self, table: str) -> list[dict]:
@@ -103,19 +131,17 @@ class SnapshotCatalog:
         loop's commit point is ``latest_iter("lineage")``; it also detects
         a stale sketch snapshot (older than the seen table it must
         over-approximate)."""
-        snaps = self._load_manifest(table)
-        if max_iter is not None:
-            snaps = [s for s in snaps if s["meta"].get("iter", -1) <= max_iter]
-        return max((s["meta"].get("iter", -1) for s in snaps), default=-1)
+        return max(
+            (s["meta"].get("iter", -1) for s in self._snaps(table, max_iter)),
+            default=-1,
+        )
 
     def latest_meta(self, table: str, max_iter: int | None = None) -> dict:
         """Meta dict of the newest committed snapshot (``<= max_iter`` when
         given), or {} — manifest-only. The crawl loop stores sketch-validity
         config (e.g. the cuckoo's ttl_iters) here so a resume under a
         different config can detect and rebuild."""
-        snaps = self._load_manifest(table)
-        if max_iter is not None:
-            snaps = [s for s in snaps if s["meta"].get("iter", -1) <= max_iter]
+        snaps = self._snaps(table, max_iter)
         return dict(snaps[-1]["meta"]) if snaps else {}
 
     def exists(self, table: str) -> bool:
@@ -126,20 +152,13 @@ class SnapshotCatalog:
         spark: SparkSession,
         table: str,
         max_iter: int | None = None,
-        merge_schema: bool = False,
         as_of: int | None = None,
         prune: tuple | None = None,
     ) -> DataFrame | None:
         """Union of live snapshots: everything since the last overwrite,
         optionally restricted to snapshots with ``meta['iter'] <= max_iter``
-        (exact-resume rollback of un-finalized iterations).
-
-        ``merge_schema=True`` enables additive schema evolution (the
-        Iceberg add-column analogue): snapshots written with a superset
-        schema union cleanly, old rows read NULL for the new columns.
-        Off by default — the footer-merge pass costs one extra file
-        round per read, and the crawl loop's own tables have fixed
-        schemas within a run.
+        (exact-resume rollback of un-finalized iterations). None when no
+        snapshot is visible.
 
         ``as_of`` is snapshot-id time travel (Iceberg ``VERSION AS OF``):
         the live set is computed as if no snapshot with ``id > as_of`` had
@@ -153,29 +172,11 @@ class SnapshotCatalog:
         dropped WITHOUT opening their files. Snapshots without stats for
         ``col`` are conservatively kept. Returns None when every live
         snapshot prunes away."""
-        snaps = self._load_manifest(table)
-        if as_of is not None:
-            snaps = [s for s in snaps if s["id"] <= as_of]
-        if max_iter is not None:
-            snaps = [s for s in snaps if s["meta"].get("iter", -1) <= max_iter]
-        if not snaps:
-            return None
-        live: list[dict] = []
-        for s in snaps:
-            if s["mode"] == "overwrite":
-                live = [s]
-            else:
-                live.append(s)
+        live = _live(self._snaps(table, max_iter, as_of))
         if prune is not None:
             col, lo, hi = prune
             live = [s for s in live if _stats_may_match(s, col, lo, hi)]
-            if not live:
-                return None
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[s["dir"] for s in live])
-        return df
+        return _scan(spark, live)
 
     def read_incremental(
         self,
@@ -183,7 +184,6 @@ class SnapshotCatalog:
         table: str,
         after_iter: int,
         until_iter: int | None = None,
-        merge_schema: bool = False,
     ) -> DataFrame | None:
         """Incremental consumption (the Iceberg incremental-read analogue):
         only the APPEND snapshots with ``after_iter < meta.iter``
@@ -208,12 +208,10 @@ class SnapshotCatalog:
         ``rollback_above`` is about to delete."""
         if until_iter is None and os.path.isdir(self._table_dir("lineage")):
             until_iter = self.latest_iter("lineage")
-        snaps = self._load_manifest(table)
         window = [
             s
-            for s in snaps
+            for s in self._snaps(table, max_iter=until_iter)
             if s["meta"].get("iter", -1) > after_iter
-            and (until_iter is None or s["meta"].get("iter", -1) <= until_iter)
         ]
         bad = [s for s in window if s["mode"] != "append"]
         if bad:
@@ -223,12 +221,7 @@ class SnapshotCatalog:
                 "is an overwrite — delta semantics end at an overwrite; "
                 "re-baseline from read() instead"
             )
-        if not window:
-            return None
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*[s["dir"] for s in window])
+        return _scan(spark, window)
 
     def rollback_above(self, max_iter: int) -> None:
         """Drop snapshots from un-finalized iterations (meta.iter > max_iter)
@@ -239,15 +232,10 @@ class SnapshotCatalog:
         for table in list(os.listdir(self.root)):
             if not os.path.isdir(self._table_dir(table)):
                 continue
-            snaps = self._load_manifest(table)
-            keep = [s for s in snaps if s["meta"].get("iter", -1) <= max_iter]
-            if len(keep) != len(snaps):
-                self._commit_manifest(table, keep)
-
-    def truncate(self, table: str) -> None:
-        tdir = self._table_dir(table)
-        if os.path.exists(tdir):
-            shutil.rmtree(tdir)
+            with self._lock(table):
+                keep = self._snaps(table, max_iter)
+                if len(keep) != len(self._load_manifest(table)):
+                    self._commit_manifest(table, keep)
 
     def expire_snapshots(self, table: str, keep_from_id: int | None = None) -> int:
         """Drop snapshots superseded by a later overwrite (the Iceberg
@@ -256,42 +244,36 @@ class SnapshotCatalog:
         are removed and their data dirs deleted. ``keep_from_id`` retains
         superseded snapshots with ``id >= keep_from_id`` so time travel
         (``read(as_of=...)``) keeps working back to that point; the default
-        expires all of them (trading time travel below the overwrite for
-        reclaimed disk, same trade as ``compact(vacuum=True)``). Live
+        expires all of them, trading time travel below the overwrite (and
+        a ``rollback_above`` below a ``compact``) for reclaimed disk. Live
         snapshots are never touched. Returns the number expired.
 
         A later ``rollback_above`` below the overwrite's iteration cannot
         re-expose expired snapshots — run expiration only on lineage-
         committed history (the crawl loop's finalized iterations)."""
-        snaps = self._load_manifest(table)
-        live: list[dict] = []
-        for s in snaps:
-            live = [s] if s["mode"] == "overwrite" else live + [s]
-        live_ids = {s["id"] for s in live}
-
-        def _expired(s: dict) -> bool:
-            return s["id"] not in live_ids and (
-                keep_from_id is None or s["id"] < keep_from_id
-            )
-
-        dead = [s for s in snaps if _expired(s)]
-        if not dead:
-            return 0
-        kept = [s for s in snaps if not _expired(s)]
-        # preserve the streaming exactly-once watermark (see compact): if an
-        # expired snapshot held the max stream_batch_id, stamp it onto the
-        # newest surviving snapshot before the dead entries vanish.
-        dead_sb = max((s["meta"].get("stream_batch_id", -1) for s in dead), default=-1)
-        if dead_sb >= 0 and kept:
-            kept_sb = max(
-                (s["meta"].get("stream_batch_id", -1) for s in kept), default=-1
-            )
-            if dead_sb > kept_sb:
+        with self._lock(table):
+            snaps = self._snaps(table)
+            live_ids = {s["id"] for s in _live(snaps)}
+            dead = [
+                s
+                for s in snaps
+                if s["id"] not in live_ids
+                and (keep_from_id is None or s["id"] < keep_from_id)
+            ]
+            if not dead:
+                return 0
+            kept = [s for s in snaps if s not in dead]
+            # streaming sinks (streaming/catalog_sink.py) skip replayed
+            # micro-batches by max(meta.stream_batch_id) over the manifest:
+            # carry an expired maximum onto the newest survivor (live
+            # snapshots always survive, so ``kept`` is never empty)
+            dead_sb = _stream_batch_max(dead)
+            if dead_sb > _stream_batch_max(kept):
                 kept[-1] = {
                     **kept[-1],
                     "meta": {**kept[-1]["meta"], "stream_batch_id": dead_sb},
                 }
-        self._commit_manifest(table, kept)
+            self._commit_manifest(table, kept)
         for s in dead:
             shutil.rmtree(s["dir"], ignore_errors=True)
         return len(dead)
@@ -305,15 +287,13 @@ class SnapshotCatalog:
         window so an IN-FLIGHT writer's staging dir is never swept — same
         caveat as Iceberg's ``older_than`` retention (pass 0 only when no
         writer can be active). Returns the number of dirs removed."""
-        import time as _time
-
         tdir = self._table_dir(table)
         if not os.path.isdir(tdir):
             return 0
         referenced = {
             os.path.basename(s["dir"]) for s in self._load_manifest(table)
         }
-        now = _time.time()
+        now = time.time()
         removed = 0
         for name in os.listdir(tdir):
             path = os.path.join(tdir, name)
@@ -328,12 +308,7 @@ class SnapshotCatalog:
         return removed
 
     def compact(
-        self,
-        spark: SparkSession,
-        table: str,
-        num_files: int | None = None,
-        vacuum: bool = False,
-        merge_schema: bool = False,
+        self, spark: SparkSession, table: str, num_files: int | None = None
     ) -> int | None:
         """Rewrite the table's LIVE state as one overwrite snapshot (the
         Iceberg `rewrite_data_files` analogue). Append-mode tables grow one
@@ -343,47 +318,46 @@ class SnapshotCatalog:
         exact resume at or above that iteration is unaffected; resuming
         BELOW it still works because the superseded snapshots stay in the
         manifest (``rollback_above`` drops the compaction and re-exposes
-        them) — unless ``vacuum=True``, which trades that time travel for
-        reclaimed disk (prunes superseded manifest entries + dirs).
+        them) until ``expire_snapshots`` reclaims them.
 
         Returns the new snapshot id, or None if there is nothing to do.
         """
-        snaps = self._load_manifest(table)
-        live: list[dict] = []
-        for s in snaps:
-            live = [s] if s["mode"] == "overwrite" else live + [s]
-        if len(live) <= 1:
-            return None
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[s["dir"] for s in live])
-        if num_files is None:
-            num_files = max(1, spark.sparkContext.defaultParallelism)
-        max_it = max(s["meta"].get("iter", -1) for s in snaps)
-        meta = {"iter": max_it, "compacted_from": [s["id"] for s in live]}
-        # exactly-once streaming sinks (streaming/catalog_sink.py) key their
-        # replay skip off max(meta.stream_batch_id) over the manifest; carry
-        # it through the overwrite so vacuum/expire of the absorbed append
-        # snapshots cannot reset the watermark and re-admit a replayed
-        # micro-batch after a crash between sink commit and checkpoint.
-        max_sb = max((s["meta"].get("stream_batch_id", -1) for s in snaps), default=-1)
-        if max_sb >= 0:
-            meta["stream_batch_id"] = max_sb
-        snap_id = self.write(
-            df.coalesce(num_files),
-            table,
-            mode="overwrite",
-            meta=meta,
-        )
-        if vacuum:
-            snaps = self._load_manifest(table)
-            keep = [s for s in snaps if s["id"] == snap_id]
-            dead = [s for s in snaps if s["id"] != snap_id]
-            self._commit_manifest(table, keep)
-            for s in dead:
-                shutil.rmtree(s["dir"], ignore_errors=True)
-        return snap_id
+        with self._lock(table):
+            snaps = self._snaps(table)
+            live = _live(snaps)
+            if len(live) <= 1:
+                return None
+            if num_files is None:
+                num_files = max(1, spark.sparkContext.defaultParallelism)
+            meta = {"iter": max(s["meta"].get("iter", -1) for s in snaps),
+                    "compacted_from": [s["id"] for s in live]}
+            return self.write(_scan(spark, live).coalesce(num_files), table,
+                              mode="overwrite", meta=meta)
+
+
+def _live(snaps: list[dict]) -> list[dict]:
+    """The entries a current read sees: the last overwrite and every
+    append committed after it (all entries when there is no overwrite)."""
+    start = max(
+        (i for i, s in enumerate(snaps) if s["mode"] == "overwrite"), default=0
+    )
+    return snaps[start:]
+
+
+def _scan(spark: SparkSession, snaps: list[dict]) -> DataFrame | None:
+    """One parquet scan over ``snaps``' data dirs, or None for no entries.
+    Footer schemas are merged only when the entries hold more than one
+    recorded schema (an entry without one counts as ``None``)."""
+    if not snaps:
+        return None
+    reader = spark.read
+    if len({s.get("schema") for s in snaps}) > 1:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*[s["dir"] for s in snaps])
+
+
+def _stream_batch_max(snaps: list[dict]) -> int:
+    return max((s["meta"].get("stream_batch_id", -1) for s in snaps), default=-1)
 
 
 def _footer_stats(data_dir: str, cols: list[str]) -> dict:
@@ -436,20 +410,3 @@ def _stats_may_match(snap: dict, col: str, lo, hi) -> bool:
     if hi is not None and mn is not None and mn > hi:
         return False
     return True
-
-
-class IcebergCatalog:  # pragma: no cover - requires iceberg jars
-    """Real Iceberg-backed catalog — same interface, used on clusters where
-    ``org.apache.iceberg.spark.SparkCatalog`` is on the classpath."""
-
-    def __init__(self, root: str):
-        raise NotImplementedError(
-            "Iceberg runtime jars are not available in this environment; "
-            "use SnapshotCatalog (same commit semantics on parquet)."
-        )
-
-
-def get_catalog(root: str, impl: str = "snapshot"):
-    if impl == "iceberg":
-        return IcebergCatalog(root)
-    return SnapshotCatalog(root)

@@ -44,11 +44,7 @@ def committed_stream_batch_max(catalog: SnapshotCatalog, table: str) -> int:
 
 
 def catalog_stream_writer(
-    catalog: SnapshotCatalog,
-    table: str,
-    meta: dict | None = None,
-    partition_by: list[str] | None = None,
-    stats_cols: list[str] | None = None,
+    catalog: SnapshotCatalog, table: str, meta: dict | None = None
 ) -> Callable[[DataFrame, int], None]:
     """Build a ``foreachBatch`` function committing into ``catalog``.
 
@@ -73,8 +69,6 @@ def catalog_stream_writer(
             table,
             mode="append",
             meta={**(meta or {}), "stream_batch_id": int(batch_id)},
-            partition_by=partition_by,
-            stats_cols=stats_cols,
         )
 
     return write_batch

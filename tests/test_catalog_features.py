@@ -1,14 +1,15 @@
 """Iceberg-analogue catalog features: time travel (read as_of), snapshot
-expiration, orphan-dir removal, and manifest-level min/max pruning.
+expiration, orphan-dir removal, manifest-level min/max pruning, and the
+per-table commit lock.
 
 These are metadata-layer semantics on SnapshotCatalog (crawl/tables.py) —
 the parquet stand-in for the real Iceberg runtime (reference analogue: the
-per-stage checkpoint history at base.py:285-309). Every feature here is
-opt-in and additive: the crawl loop's own write/read paths are untouched.
+per-stage checkpoint history at base.py:285-309).
 """
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -138,3 +139,17 @@ def test_stats_cols_with_partition_by_degrades_safely(spark, cat):
     assert snap["stats"]["id"] == [0, 99]
     assert cat.read(spark, "t", prune=("tag", "zzz", None)).count() == 100
     assert cat.read(spark, "t", prune=("id", 5000, None)) is None
+
+
+def test_concurrent_appends_to_one_table_all_commit(spark, cat):
+    # each write's manifest read-modify-write holds the table's lock: four
+    # threads appending at once must leave four snapshots, none overwritten
+    with ThreadPoolExecutor(4) as pool:
+        futures = [
+            pool.submit(cat.write, _df(spark, k * 100, k * 100 + 100, "x"), "t")
+            for k in range(4)
+        ]
+        ids = sorted(f.result(timeout=300) for f in futures)
+    assert ids == [0, 1, 2, 3]
+    assert len(cat.snapshots("t")) == 4
+    assert cat.read(spark, "t").count() == 400

@@ -1,5 +1,8 @@
 """Snapshot compaction: live state identical, snapshot count bounded,
-resume and time travel preserved (vacuum trades the latter for disk)."""
+resume and time travel preserved (``expire_snapshots`` afterwards trades
+the latter for disk)."""
+
+import os
 
 import pyspark.sql.functions as F
 
@@ -33,7 +36,7 @@ def test_compact_preserves_state_and_bounds_snapshots(spark, tmp_path):
     assert cat.read(spark, "seen").count() == 60
 
 
-def test_compact_time_travel_and_vacuum(spark, tmp_path):
+def test_compact_time_travel_and_expire(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path / "c2"))
     for it in range(4):
         cat.write(_mk(spark, it * 10, it * 10 + 10, it), "seen",
@@ -45,14 +48,13 @@ def test_compact_time_travel_and_vacuum(spark, tmp_path):
     cat.rollback_above(1)
     assert cat.read(spark, "seen").count() == 20
 
-    # vacuum: superseded snapshots pruned from manifest AND disk
+    # compact then expire: superseded snapshots pruned from manifest AND disk
     for it in range(2, 4):
         cat.write(_mk(spark, it * 10, it * 10 + 10, it), "seen",
                   mode="append", meta={"iter": it})
-    import os
-
     dirs_before = {s["dir"] for s in cat.snapshots("seen")}
-    cat.compact(spark, "seen", vacuum=True)
+    cat.compact(spark, "seen")
+    cat.expire_snapshots("seen")
     snaps = cat.snapshots("seen")
     assert len(snaps) == 1 and "compacted_from" in snaps[0]["meta"]
     assert cat.read(spark, "seen").count() == 40
@@ -74,11 +76,17 @@ def test_loop_with_compaction_matches_plain_run(spark, t1_dir, tmp_path):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # compaction actually bounded the seen snapshot chain
     assert len([s for s in cat_b.snapshots("seen") if s["mode"] == "overwrite"]) >= 1
+    # every crawl table keeps one schema across its snapshots (compactions
+    # included), so no scan of the loop's own tables merges footers
+    for cat in (cat_a, cat_b):
+        for table in sorted(os.listdir(cat.root)):
+            schemas = {s.get("schema") for s in cat.snapshots(table)}
+            assert len(schemas) == 1 and None not in schemas, (table, schemas)
 
 
 def test_incremental_reader_stable_across_compact(spark, t1_dir, tmp_path):
     """The CDC contract under maintenance: a consumer holding a
-    read_incremental window across a (non-vacuum) compact sees identical
+    read_incremental window across a compact sees identical
     rows — compaction adds an overwrite snapshot but never deletes the data
     files the held plan references. A NEW incremental read across the
     compaction point refuses (overwrite breaks delta semantics) instead of
@@ -101,9 +109,9 @@ def test_incremental_reader_stable_across_compact(spark, t1_dir, tmp_path):
 
 def test_schema_evolution_additive_column(spark, tmp_path):
     """Iceberg-style additive schema evolution: a snapshot written with an
-    extra column unions cleanly under merge_schema=True (old rows NULL for
-    the new column); compaction of the evolved chain preserves the merged
-    shape. The default read stays cheap (no footer-merge pass)."""
+    extra column unions cleanly (old rows NULL for the new column) because
+    the manifest records two schemas; a plain read, incremental read and
+    compaction all keep the new column."""
     cat = SnapshotCatalog(str(tmp_path / "evo"))
     v1 = spark.range(5).select(F.col("id").alias("url_hash"),
                                F.lit(0).alias("seen_iter"))
@@ -114,19 +122,19 @@ def test_schema_evolution_additive_column(spark, tmp_path):
     )
     cat.write(v2, "seen", mode="append", meta={"iter": 1})
 
-    merged = cat.read(spark, "seen", merge_schema=True)
+    merged = cat.read(spark, "seen")
     assert set(merged.columns) == {"url_hash", "seen_iter", "source_tag"}
     rows = {r["url_hash"]: r["source_tag"] for r in merged.collect()}
     assert rows[0] is None and rows[7] == "abc"
     assert merged.count() == 8
 
     # incremental read of just the evolved delta carries the new column
-    delta = cat.read_incremental(spark, "seen", after_iter=0,
-                                 merge_schema=True)
+    delta = cat.read_incremental(spark, "seen", after_iter=0)
     assert "source_tag" in delta.columns and delta.count() == 3
 
     # compaction rewrites the merged shape into one snapshot
-    cat.compact(spark, "seen", merge_schema=True)
+    cat.compact(spark, "seen")
     after = cat.read(spark, "seen")
     assert set(after.columns) == {"url_hash", "seen_iter", "source_tag"}
     assert after.count() == 8
+    assert after.filter(F.col("source_tag") == "abc").count() == 3

@@ -81,41 +81,61 @@ class _Crash(RuntimeError):
 
 
 class _CrashingCatalog(SnapshotCatalog):
-    """Raises on ``table``'s write at iteration ``at_iter``: after the
-    snapshot commits (an orphan lands) for every table but lineage, before
-    it for lineage (the commit point never lands)."""
+    """Raises in ``table``'s write at iteration ``at_iter``, at ``point``:
+    "before" the write (nothing lands), "staged" between the parquet
+    staging and the manifest commit (an unreferenced data dir lands) or
+    "committed" after the commit (an orphan snapshot lands)."""
 
-    def __init__(self, root, table, at_iter):
+    def __init__(self, root, table, at_iter, point):
         super().__init__(root)
-        self.table, self.at_iter = table, at_iter
+        self.table, self.at_iter, self.point = table, at_iter, point
+
+    def _hit(self, table, meta):
+        return table == self.table and meta.get("iter") == self.at_iter
 
     def write(self, df, table, mode="append", meta=None, *args, **kwargs):
-        crash = table == self.table and (meta or {}).get("iter") == self.at_iter
-        if crash and table == "lineage":
+        hit = self._hit(table, meta or {})
+        if hit and self.point == "before":
             raise _Crash(table)
         out = super().write(df, table, mode, meta, *args, **kwargs)
-        if crash:
+        if hit and self.point == "committed":
             raise _Crash(table)
         return out
 
+    def _commit_manifest(self, table, snapshots):
+        if self.point == "staged" and snapshots and self._hit(table, snapshots[-1]["meta"]):
+            raise _Crash(table)
+        super()._commit_manifest(table, snapshots)
 
-@pytest.mark.parametrize("table", ["politeness", "results", "lineage"])
-def test_resume_after_crash_inside_commit_block(spark, t1_dir, tmp_path, golden, table):
-    """A crash at an early pool write, a late pool write or the lineage
-    commit of iteration 1 leaves iteration 0 as the commit point; resuming
-    with a plain catalog equals the uninterrupted run."""
+
+@pytest.mark.parametrize(
+    "table,point",
+    [("politeness", "committed"), ("results", "committed"),
+     ("lineage", "before"), ("seen", "staged")],
+    ids=["politeness", "results", "lineage", "seen"],
+)
+def test_resume_after_crash_inside_commit_block(
+    spark, t1_dir, tmp_path, golden, table, point
+):
+    """A crash at an early pool write, a late pool write, the staging gap
+    of the seen write or the lineage commit of iteration 1 leaves iteration
+    0 as the commit point; resuming with a plain catalog equals the
+    uninterrupted run."""
     cfg = CrawlConfig(iterations=3, **T1_CFG)
     root = str(tmp_path / "crash")
-    crashing = _CrashingCatalog(root, table, at_iter=1)
+    crashing = _CrashingCatalog(root, table, 1, point)
     with pytest.raises(_Crash):
         run_crawl(spark, crashing, t1_dir, cfg)
     assert crashing.latest_iter("lineage") == 0
-    if table != "lineage":
-        assert crashing.latest_iter(table) == 1  # the orphan landed
+    # only a crash after the commit leaves an orphan snapshot in the manifest
+    assert crashing.latest_iter(table) == (1 if point == "committed" else 0)
 
     out = run_crawl(spark, SnapshotCatalog(root), t1_dir, cfg)
     assert out["start_iter"] == 1
     assert _final_state(spark, SnapshotCatalog(root)) == golden
+    if point == "staged":
+        # the staged dir no manifest ever referenced is the one orphan
+        assert SnapshotCatalog(root).remove_orphans(table, grace_s=0) == 1
 
 
 def test_resume_across_bloom_partition_upgrade(spark, tmp_path, t1_dir):
@@ -271,7 +291,7 @@ def test_schema_evolution_across_resume(spark, tmp_path):
 
     rows = {
         r["k"]: (r["val"], r["score"])
-        for r in cat.read(spark, "data", merge_schema=True).collect()
+        for r in cat.read(spark, "data").collect()
     }
     assert set(rows) == {0, 1, 2, 3, 4}          # orphan physically gone
     assert rows[0] == ("v0", None)               # old rows: NULL new column
@@ -284,9 +304,9 @@ def test_schema_evolution_across_resume(spark, tmp_path):
     )
     cat.write(redo, "data", mode="append", meta={"iter": 2})
     lineage_commit(2)
-    after = cat.read(spark, "data", merge_schema=True)
+    after = cat.read(spark, "data")
     assert after.count() == 7
     # incremental consumers see only the committed wide delta
-    delta = cat.read_incremental(spark, "data", after_iter=1, merge_schema=True)
+    delta = cat.read_incremental(spark, "data", after_iter=1)
     assert sorted(r["k"] for r in delta.collect()) == [5, 6]
     assert set(delta.columns) == {"k", "val", "score"}

@@ -12,7 +12,7 @@ from nightcrawler_ds_pipeline_spark.crawl.seen import (
     filter_unseen,
     merge_bloom_tables,
 )
-from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog, get_catalog
+from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
 
 
 def test_snapshot_append_overwrite_and_iter_filter(spark, tmp_path):
@@ -27,11 +27,6 @@ def test_snapshot_append_overwrite_and_iter_filter(spark, tmp_path):
     assert cat.read(spark, "t").count() == 3
     assert cat.read(spark, "t", max_iter=1).count() == 8
     assert cat.read(spark, "missing") is None
-
-
-def test_iceberg_catalog_is_gated():
-    with pytest.raises(NotImplementedError):
-        get_catalog("/tmp/x", impl="iceberg")
 
 
 def test_bloom_no_false_negatives_and_low_fp(spark):

@@ -314,13 +314,14 @@ def test_catalog_stream_writer_exactly_once(spark, tmp_path):
     assert ids == sorted(ids) and len(ids) == 2  # one snapshot per batch
     assert all(s["meta"]["origin"] == "stream" for s in catalog.snapshots("results"))
 
-    # compaction (even with vacuum) must carry the stream_batch_id
+    # compaction followed by expiry must carry the stream_batch_id
     # watermark into the surviving overwrite snapshot: a crash-replay after
     # compaction would otherwise see max = -1 and append the last
     # micro-batch a second time, breaking the exactly-once contract
     b_max2 = committed_stream_batch_max(catalog, "results")
     assert b_max2 > b_max
-    catalog.compact(spark, "results", vacuum=True)
+    catalog.compact(spark, "results")
+    catalog.expire_snapshots("results")
     assert len(catalog.snapshots("results")) == 1
     assert committed_stream_batch_max(catalog, "results") == b_max2
     writer(replay_df, b_max2)
