@@ -9,9 +9,9 @@ Local sandbox:
         --catalog /tmp/crawl_state --iterations 3
 
 Cluster: same invocation with --master spark://... / yarn / k8s; the state
-catalog root moves to a shared filesystem (or the Iceberg catalog impl once
-its jars are on the classpath). Resume is automatic: re-running with the
-same --catalog continues after the last lineage-committed iteration.
+catalog root moves to a shared filesystem. Resume is automatic: re-running
+with the same --catalog continues after the last lineage-committed
+iteration. Every flag's default is the matching ``CrawlConfig`` field.
 """
 
 from __future__ import annotations
@@ -25,34 +25,36 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl
+
+    d = CrawlConfig()
     ap = argparse.ArgumentParser(description="nightcrawler-ds-pipeline-spark crawl")
     ap.add_argument("--fixtures", required=False, default=None,
                     help="fixture dir (serp/fetch/robots/images parquet); "
                          "default: generate tier t2 under /tmp")
     ap.add_argument("--catalog", required=True, help="state catalog root dir")
-    ap.add_argument("--iterations", type=int, default=3)
-    ap.add_argument("--window-ms", type=int, default=60_000)
-    ap.add_argument("--max-per-host", type=int, default=100)
-    ap.add_argument("--num-salts", type=int, default=8)
-    ap.add_argument("--run-ts", default="1970-01-01_00-00-00",
+    ap.add_argument("--iterations", type=int, default=d.iterations)
+    ap.add_argument("--window-ms", type=int, default=d.window_ms)
+    ap.add_argument("--max-per-host", type=int, default=d.max_per_host)
+    ap.add_argument("--num-salts", type=int, default=d.num_salts)
+    ap.add_argument("--run-ts", default=d.run_ts,
                     help="injected run timestamp (never wall-clock)")
-    ap.add_argument("--sketch", choices=("bloom", "cuckoo"), default="bloom",
+    ap.add_argument("--sketch", choices=("bloom", "cuckoo"), default=d.sketch,
                     help="seen-set pre-pass sketch; cuckoo prunes TTL "
                          "expiries (deletion-capable)")
-    ap.add_argument("--bloom-min-seen", type=int, default=100_000,
+    ap.add_argument("--bloom-min-seen", type=int, default=d.bloom_min_seen,
                     help="skip sketch maintenance below this seen-set size "
                          "(exact anti-join decides either way)")
-    ap.add_argument("--ttl-iters", type=int, default=None,
+    ap.add_argument("--ttl-iters", type=int, default=d.ttl_iters,
                     help="seen entries older than this many iterations stop "
                          "suppressing re-fetch (reference cache_duration)")
-    ap.add_argument("--compact-every", type=int, default=None,
+    ap.add_argument("--compact-every", type=int, default=d.compact_every,
                     help="compact append-mode state tables every k iterations")
-    ap.add_argument("--robots-max-age", type=int, default=None,
+    ap.add_argument("--robots-max-age", type=int, default=d.robots_max_age_iters,
                     help="robots.txt cache TTL in iterations (stale entries "
                          "re-fetch from the source; default: always fresh)")
     args = ap.parse_args()
 
-    from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl
     from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
     from nightcrawler_ds_pipeline_spark.session import get_spark
 

@@ -4,51 +4,22 @@ The reference checkpoints a JSON file after every stage (base.py:285-309)
 and can re-enter the pipeline at any stage from that file (E3:
 cli/extractor.py:63-114 re-runs only Zyte from the serpapi checkpoint;
 cli/processor.py:54-83 re-runs only DataProcessor from the zyte
-checkpoint). Here every stage writes a snapshot table ``stage_<name>`` and
-``run_from`` re-enters at any named stage by reading its predecessor's
-snapshot — the snapshot layer's atomic commits make partial runs safe.
+checkpoint). Here every stage of ``stages.pipeline_stages`` writes a
+snapshot table ``stage_<name>`` and ``run_from`` re-enters at any named
+stage by reading its predecessor's snapshot — the snapshot layer's atomic
+commits make partial runs safe.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
-from nightcrawler_ds_pipeline_spark.pipeline import stages as S
-from nightcrawler_ds_pipeline_spark.pipeline.stages import PipelineConfig
-
-# ordered stage list — mirrors handle_request (full_pipeline.py:84-215)
-STAGE_ORDER = [
-    "serpapi",
-    "zyte",
-    "processing",
-    "delivery_policy",
-    "page_type",
-    "blocked_content",
-    "content_domain",
-    "suspiciousness",
-    "ranker",
-    "final",
-]
-
-
-def _stage_fns(
-    serp: DataFrame, responses: DataFrame, cfg: PipelineConfig
-) -> dict[str, Callable[[DataFrame | None], DataFrame]]:
-    return {
-        "serpapi": lambda _prev: S.s01_serp_scan(serp, cfg),
-        "zyte": lambda prev: S.s04_zyte_fetch(prev, responses, cfg),
-        "processing": lambda prev: S.s05_data_processor(prev, cfg),
-        "delivery_policy": lambda prev: S.s06_delivery_policy(prev, cfg),
-        "page_type": lambda prev: S.s07_page_type(prev, cfg),
-        "blocked_content": lambda prev: S.s08_blocked_content(prev, cfg),
-        "content_domain": lambda prev: S.s09_content_domain(prev, cfg),
-        "suspiciousness": lambda prev: S.s10_suspiciousness(prev, cfg),
-        "ranker": lambda prev: S.s11_ranker(prev, cfg),
-        "final": lambda prev: S.db_sink_projection(prev),
-    }
+from nightcrawler_ds_pipeline_spark.pipeline.stages import (
+    PipelineConfig,
+    pipeline_stages,
+    run_stages,
+)
 
 
 def run_from(
@@ -62,24 +33,15 @@ def run_from(
     """Run the pipeline starting at ``start_stage``; earlier stages are read
     from their checkpoint snapshots (they must exist — like the reference's
     `--step=zyte --urlpath=<checkpoint>`)."""
-    cfg = cfg or PipelineConfig()
-    if start_stage not in STAGE_ORDER:
-        raise ValueError(f"unknown stage {start_stage!r}; one of {STAGE_ORDER}")
-    fns = _stage_fns(serp, responses, cfg)
-    idx = STAGE_ORDER.index(start_stage)
-    if idx == 0:
-        prev: DataFrame | None = None
-    else:
-        prev_name = STAGE_ORDER[idx - 1]
-        prev = catalog.read(spark, f"stage_{prev_name}")
-        if prev is None:
-            raise ValueError(
-                f"cannot resume at {start_stage!r}: missing checkpoint "
-                f"stage_{prev_name}"
-            )
-    df = prev
-    for name in STAGE_ORDER[idx:]:
-        df = fns[name](df)
-        catalog.write(df, f"stage_{name}", mode="overwrite", meta={"stage": name})
-        df = catalog.read(spark, f"stage_{name}")  # re-read committed state
-    return df
+    stages = pipeline_stages(responses)
+    names = [name for name, _ in stages]
+    if start_stage not in names:
+        raise ValueError(f"unknown stage {start_stage!r}; one of {names}")
+    idx = names.index(start_stage)
+    df = serp
+    if idx > 0:
+        prev = f"stage_{names[idx - 1]}"
+        df = catalog.read(spark, prev)
+        if df is None:
+            raise ValueError(f"cannot resume at {start_stage!r}: missing checkpoint {prev}")
+    return run_stages(df, stages[idx:], cfg or PipelineConfig(), catalog)

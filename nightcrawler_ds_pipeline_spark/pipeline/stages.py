@@ -13,15 +13,21 @@ exactly behind ``strict_reference_parity`` (default True):
   (s04_zyte.py:110-112 + base.py:318-327 replace semantics).
 - stages s06/s08/s09/s10/s11 are pass-throughs that only re-count
   (s06:12-35, s08:11-34, s09:12-35, s10:11-34, s11:12-36).
+
+``pipeline_stages`` is the one stage table: each name is a ``stage_counts``
+key and a ``runner.run_from`` re-entry point; ``run_stages`` walks it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nightcrawler_ds_pipeline_spark.crawl.backends import normalize_responses
+from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
 from nightcrawler_ds_pipeline_spark.functions.text import (
     checksum_uid_col,
     price_concat_col,
@@ -31,6 +37,8 @@ from nightcrawler_ds_pipeline_spark.operators.filters import (
     add_swiss_features,
     contains_any,
 )
+from nightcrawler_ds_pipeline_spark.operators.llm import classify_delivery_policy
+from nightcrawler_ds_pipeline_spark.pipeline.enrichment import aggregate_keywords
 
 
 @dataclass
@@ -52,26 +60,17 @@ class PipelineConfig:
     stage_counts: dict = field(default_factory=dict)  # numberOfResultsAfterStage
 
 
-def _count(cfg: PipelineConfig, stage: str, df: DataFrame) -> DataFrame:
-    """base.py:323-327 — record numberOfResultsAfterStage per stage."""
-    cfg.stage_counts[stage] = df.count()
-    return df
-
-
 def s01_serp_scan(serp: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """S1-S3: per-source projection, per-source truncation, hard cap.
 
     Caps apply per (keyword, offer_root) in deterministic position order
     (the reference truncates each source's URL list, s01:144-148)."""
-    from pyspark.sql import Window
-
     df = serp.filter(F.col("offer_root") != "REVERSE_IMAGE_SEARCH")
     w = Window.partitionBy("keyword", "offer_root").orderBy("position")
     df = df.withColumn("__rn", F.row_number().over(w))
     if cfg.max_results_per_source > 0:
         df = df.filter(F.col("__rn") <= cfg.max_results_per_source)
-    df = df.filter(F.col("__rn") <= cfg.hard_cap).drop("__rn")
-    return _count(cfg, "serpapi", df)
+    return df.filter(F.col("__rn") <= cfg.hard_cap).drop("__rn")
 
 
 def s02_keyword_enrichment(serp: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -84,13 +83,7 @@ def s02_keyword_enrichment(serp: DataFrame, cfg: PipelineConfig) -> DataFrame:
         df = df.filter(
             ~contains_any(F.lower(F.col("keyword_enriched")), KEYWORD_BLACKLIST)
         )
-    agg = df.groupBy("keyword_enriched").agg(
-        F.sum("keyword_volume").alias("keyword_volume"),
-        F.min("keyword_location").alias("keyword_location"),
-        F.min("keyword_language").alias("keyword_language"),
-        F.min("offer_root").alias("offer_root"),
-    )
-    return _count(cfg, "keyword_enrichment", agg)
+    return aggregate_keywords(df)
 
 
 def s04_zyte_fetch(df: DataFrame, responses: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -98,10 +91,7 @@ def s04_zyte_fetch(df: DataFrame, responses: DataFrame, cfg: PipelineConfig) -> 
     unfetched URLs vanish (s04_zyte.py:110-112). price concat per F9; image
     set-dedup per L7 (array_distinct). S8: ``cfg.fetch_backend`` selects the
     response adapter — diffbot-shaped rows normalize to this schema first."""
-    from nightcrawler_ds_pipeline_spark.crawl.backends import normalize_responses
-
-    responses = normalize_responses(responses, cfg.fetch_backend)
-    resp = responses.select(
+    resp = normalize_responses(responses, cfg.fetch_backend).select(
         "url",
         F.col("error"),
         "product_name",
@@ -114,7 +104,7 @@ def s04_zyte_fetch(df: DataFrame, responses: DataFrame, cfg: PipelineConfig) -> 
         "seconds_taken",
     )
     joined = df.join(resp, "url", "inner").filter(~F.col("error"))
-    out = (
+    return (
         joined.withColumn("title", F.coalesce(F.col("product_name"), F.lit("")))
         .withColumn("price", price_concat_col("product_price", "currency_raw"))
         .withColumn("full_description", F.coalesce(F.col("description"), F.lit("")))
@@ -135,16 +125,17 @@ def s04_zyte_fetch(df: DataFrame, responses: DataFrame, cfg: PipelineConfig) -> 
         .drop("product_name", "product_price", "currency_raw", "description",
               "probability", "main_image_url", "image_urls", "seconds_taken", "error")
     )
-    return _count(cfg, "zyte", out)
 
 
-def s05_data_processor(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """P8-P10: swiss feature flags (+bug-parity OR-reduce) + country filter."""
-    flagged = add_swiss_features(df, "url", "price")
-    _count(cfg, "processing_raw", flagged)
-    if cfg.country == "CH":
-        flagged = flagged.filter(F.col("result_sold_CH"))
-    return _count(cfg, "processing_filtered", flagged)
+def s05_swiss_flags(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """P8/P9: swiss feature flags (+bug-parity OR-reduce)."""
+    return add_swiss_features(df, "url", "price")
+
+
+def s05_country_filter(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """P10: keep CH-sold rows on a CH run; other countries pass all
+    (s05:58-67)."""
+    return df.filter(F.col("result_sold_CH")) if cfg.country == "CH" else df
 
 
 def s06_delivery_policy(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -153,14 +144,10 @@ def s06_delivery_policy(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     classification columns (is_shipping_<c>_answer/_justification +
     request-memo key) the reference's LLM stage would produce."""
     if cfg.delivery_policy_method == "llm_stub":
-        from nightcrawler_ds_pipeline_spark.operators.llm import (
-            classify_delivery_policy,
-        )
-
         df = classify_delivery_policy(
             df, text_col="full_description", country=cfg.country.lower()
         )
-    return _count(cfg, "delivery_policy", df)
+    return df
 
 
 def s07_page_type(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -183,28 +170,11 @@ def s07_page_type(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         ).otherwise(F.lit(0.5))
     else:
         proba = F.coalesce(F.col("zyte_probability"), F.lit(0.0))
-    out = df.withColumn(
+    return df.withColumn(
         "page_type",
         F.when(proba > cfg.page_type_threshold, F.lit("ecommerce_product"))
         .otherwise(F.lit("other")),
     )
-    return _count(cfg, "page_type", out)
-
-
-def s08_blocked_content(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    return _count(cfg, "blocked_content", df)  # pass-through
-
-
-def s09_content_domain(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    return _count(cfg, "content_domain", df)  # pass-through
-
-
-def s10_suspiciousness(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    return _count(cfg, "suspiciousness", df)  # pass-through
-
-
-def s11_ranker(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    return _count(cfg, "ranker", df)  # pass-through stub (s11:20-36)
 
 
 def db_sink_projection(df: DataFrame) -> DataFrame:
@@ -221,27 +191,61 @@ def db_sink_projection(df: DataFrame) -> DataFrame:
     )
 
 
-def _tail_chain(df: DataFrame, responses: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Stages s04→s11 + sink — shared by the text/url/image entry points
-    (the reference runs the identical chain after seeding,
-    full_pipeline.py:99-215)."""
-    df = s04_zyte_fetch(df, responses, cfg)
-    df = s05_data_processor(df, cfg)
-    df = s06_delivery_policy(df, cfg)
-    df = s07_page_type(df, cfg)
-    df = s08_blocked_content(df, cfg)
-    df = s09_content_domain(df, cfg)
-    df = s10_suspiciousness(df, cfg)
-    df = s11_ranker(df, cfg)
-    return db_sink_projection(df)
+# (name, fn(df, cfg) -> df), or (name, None) for a pass-through
+Stage = tuple[str, Callable[[DataFrame, PipelineConfig], DataFrame] | None]
+
+
+def pipeline_stages(
+    responses: DataFrame, seed: Stage = ("serpapi", s01_serp_scan)
+) -> list[Stage]:
+    """The stage table, in handle_request order (full_pipeline.py:84-215).
+    The image/url entries swap the ``seed`` stage and run the same chain
+    (full_pipeline.py:99-215). s05 is two counted halves, s08-s11 are
+    pass-throughs, and the last entry is the sink."""
+    return [
+        seed,
+        ("zyte", lambda df, cfg: s04_zyte_fetch(df, responses, cfg)),
+        ("processing_raw", s05_swiss_flags),
+        ("processing_filtered", s05_country_filter),
+        ("delivery_policy", s06_delivery_policy),
+        ("page_type", s07_page_type),
+        ("blocked_content", None),
+        ("content_domain", None),
+        ("suspiciousness", None),
+        ("ranker", None),  # stub (s11:20-36)
+        ("final", lambda df, _cfg: db_sink_projection(df)),
+    ]
+
+
+def run_stages(
+    df: DataFrame, stages: list[Stage], cfg: PipelineConfig,
+    catalog: SnapshotCatalog | None = None,
+) -> DataFrame:
+    """Apply ``stages`` in order, recording numberOfResultsAfterStage
+    (base.py:323-327) for all but the last entry, the sink. A stage that
+    returns its input keeps the previous count (if any) and starts no job. A
+    ``catalog`` checkpoints each stage as ``stage_<name>`` (base.py:285-309)
+    and the walk counts and continues from the re-read snapshot."""
+    n = None
+    for i, (name, fn) in enumerate(stages):
+        out = df if fn is None else fn(df, cfg)
+        changed = out is not df or n is None
+        if catalog is not None:
+            catalog.write(out, f"stage_{name}", mode="overwrite", meta={"stage": name})
+            out = catalog.read(out.sparkSession, f"stage_{name}")
+        if i < len(stages) - 1:
+            if changed:
+                n = out.count()
+            cfg.stage_counts[name] = n
+        df = out
+    return df
 
 
 def run_text_pipeline(
     serp: DataFrame, responses: DataFrame, cfg: PipelineConfig | None = None
 ) -> DataFrame:
     """E1 (text keyword): the full fullrun chain."""
-    cfg = cfg or PipelineConfig()
-    return _tail_chain(s01_serp_scan(serp, cfg), responses, cfg)
+    return run_stages(serp, pipeline_stages(responses), cfg or PipelineConfig())
 
 
 def run_image_pipeline(
@@ -250,8 +254,6 @@ def run_image_pipeline(
     """E1 (image input): reverse-image-search seeds — rows must carry a
     thumbnail (P7, s03:161) — then the same chain (full_pipeline.py:131-150)."""
     cfg = cfg or PipelineConfig()
-    from pyspark.sql import Window
-
     ris = serp.filter(
         (F.col("offer_root") == "REVERSE_IMAGE_SEARCH")
         & F.col("image_url").isNotNull()
@@ -269,8 +271,8 @@ def run_image_pipeline(
         .select("url", "offer_root")
         .distinct()  # image-set dedup: the same url found via two thumbs
     )
-    _count(cfg, "reverse_image_search", seeds)
-    return _tail_chain(seeds, responses, cfg)
+    stages = pipeline_stages(responses, ("reverse_image_search", None))
+    return run_stages(seeds, stages, cfg)
 
 
 def run_url_pipeline(
@@ -286,5 +288,4 @@ def run_url_pipeline(
         "image_url string, keyword_enriched string, keyword_volume double, "
         "keyword_language string, keyword_location string",
     )
-    _count(cfg, "url_seed", seed)
-    return _tail_chain(seed, responses, cfg)
+    return run_stages(seed, pipeline_stages(responses, ("url_seed", None)), cfg)

@@ -195,7 +195,7 @@ def run_streaming_frontier(
         )
         q.awaitTermination()
 
-    def _count(table: str) -> int:
+    def _rows(table: str) -> int:
         return catalog.read(spark, table).count() if catalog.exists(table) else 0
 
-    return {"dequeued": _count("dequeued"), "overflow": _count("overflow")}
+    return {"dequeued": _rows("dequeued"), "overflow": _rows("overflow")}

@@ -3,6 +3,7 @@ oracle on identical fixture inputs — final rows byte-equal, stage counts
 equal (SURVEY.md §5.2)."""
 
 import pyspark.sql.functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 
 from nightcrawler_ds_pipeline_spark.pipeline.reference_oracle import (
     run_reference_pipeline,
@@ -10,6 +11,7 @@ from nightcrawler_ds_pipeline_spark.pipeline.reference_oracle import (
 from nightcrawler_ds_pipeline_spark.pipeline.stages import (
     PipelineConfig,
     run_text_pipeline,
+    run_url_pipeline,
     s02_keyword_enrichment,
 )
 
@@ -20,15 +22,28 @@ def _inputs(spark, t1_dir):
     return serp, responses
 
 
-def test_full_pipeline_matches_reference_oracle(spark, t1_dir):
+def test_full_pipeline_matches_reference_oracle(spark, t1_dir, monkeypatch):
     serp, responses = _inputs(spark, t1_dir)
     cfg = PipelineConfig(country="CH")
+    # a CH run counts serpapi, zyte, processing_raw, processing_filtered and
+    # page_type once each; the pass-throughs reuse a count and the sink is
+    # never counted (DataFrame here is the session's concrete class)
+    n_counts = [0]
+    count = DataFrame.count
+
+    def counting(self):
+        n_counts[0] += 1
+        return count(self)
+
+    monkeypatch.setattr(DataFrame, "count", counting)
     out = run_text_pipeline(serp, responses, cfg)
     spark_rows = sorted(
         (r["url"], r["title"], r["root"], r["uid"], r["score"], r["page_type"],
          r["result_sold_CH"])
         for r in out.collect()
     )
+    monkeypatch.undo()
+    assert n_counts[0] == 5
 
     serp_rows = [r.asDict() for r in serp.collect()]
     resp_rows = {r["url"]: r.asDict() for r in responses.collect()}
@@ -52,6 +67,24 @@ def test_pass_all_countries(spark, t1_dir):
     out = run_text_pipeline(serp, responses, cfg)
     assert cfg.stage_counts["processing_filtered"] == cfg.stage_counts["processing_raw"]
     assert out.count() == cfg.stage_counts["processing_raw"]
+
+
+def test_url_pipeline_matches_text_pipeline_row(spark, t1_dir):
+    """E1 url input: a 1-row seed runs the text chain from zyte on. Its row
+    equals the text pipeline's row for that url except ``root``, which is
+    the synthesized seed's offer_root."""
+    serp, responses = _inputs(spark, t1_dir)
+    ok = responses.filter(~F.col("error")).select("url")
+    url = (
+        serp.filter(F.col("offer_root") != "REVERSE_IMAGE_SEARCH")
+        .join(ok, "url").orderBy("url").first()["url"]
+    )
+    text = run_text_pipeline(serp, responses, PipelineConfig(country="XX"))
+    [want] = text.filter(F.col("url") == url).collect()
+    cfg = PipelineConfig(country="XX")
+    [got] = run_url_pipeline(spark, url, "kw", responses, cfg).collect()
+    assert got.asDict() == {**want.asDict(), "root": "DEFAULT"}
+    assert cfg.stage_counts["url_seed"] == 1
 
 
 def test_keyword_enrichment_blacklist_noop_parity(spark, t1_dir):

@@ -21,8 +21,14 @@ def test_resume_from_mid_stage_equals_full_run(spark, t1_dir, tmp_path):
     full = run_from(spark, cat, serp, responses, PipelineConfig(), "serpapi")
     golden = _rows(full)
 
-    # resume at processing (reads the committed zyte checkpoint)
-    resumed = run_from(spark, cat, serp, responses, PipelineConfig(), "processing")
+    # resume at processing_raw (reads the committed zyte checkpoint)
+    resumed = run_from(spark, cat, serp, responses, PipelineConfig(), "processing_raw")
+    assert _rows(resumed) == golden
+
+    # resume at processing_filtered (reads the swiss-flags checkpoint)
+    resumed = run_from(
+        spark, cat, serp, responses, PipelineConfig(), "processing_filtered"
+    )
     assert _rows(resumed) == golden
 
     # resume at ranker
