@@ -150,31 +150,26 @@ def _phash_dedup(fetched: DataFrame, history_phash: DataFrame | None) -> DataFra
     """is_phash_dup: exact phash already in history, or an earlier row (by
     deterministic seq) of this batch.
 
-    Only decode_ok rows enter the phash window/join: failed/imageless rows
-    all share phash=0 and would pile into ONE window partition (a straggler
-    task at scale); their is_phash_dup is False by definition."""
-    ok = fetched.filter(F.col("decode_ok"))
-    ko = fetched.filter(~F.col("decode_ok")).withColumn(
-        "is_phash_dup", F.lit(False)
-    )
-    w = Window.partitionBy("phash").orderBy(F.col("seq").asc())
-    out = ok.withColumn("__batch_dup", F.row_number().over(w) > 1)
+    One pass over ``fetched``: a split into decoded and failed rows plus a
+    union would run the whole fetch+decode subtree twice. Failed or
+    imageless rows all share phash=0, so they are keyed by their own
+    url_hash: they neither pile into ONE window partition (a straggler task
+    at scale) nor match anything, and their is_phash_dup is False."""
+    key = F.when(F.col("decode_ok"), F.col("phash")).otherwise(F.col("url_hash"))
+    w = Window.partitionBy("decode_ok", key).orderBy(F.col("seq").asc())
+    dup = F.row_number().over(w) > 1
     if history_phash is not None:
         # no broadcast hint: the phash history grows without bound across
         # iterations — AQE broadcasts while it's small and falls back to a
         # shuffle join once it isn't.
-        hist = history_phash.select(F.col("phash").alias("__hist_phash")).distinct()
-        out = out.join(
-            hist, out["phash"] == hist["__hist_phash"], "left"
-        ).withColumn("__hist_dup", F.col("__hist_phash").isNotNull()).drop(
-            "__hist_phash"
-        )
-    else:
-        out = out.withColumn("__hist_dup", F.lit(False))
-    out = out.withColumn(
-        "is_phash_dup", F.col("__batch_dup") | F.col("__hist_dup")
-    ).drop("__batch_dup", "__hist_dup")
-    return out.unionByName(ko.select(*out.columns))
+        hist = history_phash.select(
+            F.lit(True).alias("__hist_ok"), F.col("phash").alias("__hist_phash")
+        ).distinct()
+        on = (F.col("decode_ok") == F.col("__hist_ok")) & (key == F.col("__hist_phash"))
+        fetched = fetched.join(hist, on, "left")
+        dup = dup | F.col("__hist_ok").isNotNull()
+    out = fetched.withColumn("is_phash_dup", F.col("decode_ok") & dup)
+    return out.drop("__hist_ok", "__hist_phash")
 
 
 def _next_frontier(gated, batch, deduped, new_seen, seen, it: int) -> DataFrame:

@@ -1,44 +1,53 @@
-"""The scaling workload: one steady-state crawl mega-batch.
+"""The scaling workload: one steady-state crawl mega-batch on the loop's
+own kernels.
 
 BASELINE.json requires fetch+dedup throughput scaling efficiency ≥ 0.8 from
 N to 4N executors. The multi-iteration loop at fixture scale is dominated by
 fixed per-job driver overhead (Amdahl — ~10-20 s of stage/driver latency per
 run regardless of cores), so it cannot evidence compute scaling. The honest
-steady-state unit is one politeness mega-batch shaped exactly like a
-production loop ITERATION — and like the production loop it STARTS FROM
-MATERIALIZED TABLES (the catalog parquet snapshots, which already store
-canonical_url/url_hash/host — canonicalization happens once at edge
-creation, loop.py step 5c, not per iteration):
+steady-state unit is ONE iteration of ``crawl/loop.py`` run by the loop's
+own kernels over MATERIALIZED TABLES (frontier with canonical_url/url_hash/
+host, seen set, Bloom sketch, robots — all parquet, written once, untimed):
 
-  read frontier/seen/bloom parquet (untimed one-time synth+write) →
-  Bloom membership pre-pass (co-partitioned probe) → exact left-anti seen
-  join → salted per-host top-K dequeue → FETCH+DECODE (mapInPandas: per-URL
-  payload materializes executor-side — as in a real crawl, where bytes
-  arrive at the fetcher — then image decode + 64-bit pHash) → within-batch
-  phash dedup + outlink-edge canonicalization (pandas UDF, the per-
-  iteration kernel that DOES run on fetch output) → aggregate.
+  `seen.filter_unseen` → `politeness.robots_filter` + `dequeue_gated` →
+  cached count + `assign_global_seq` → FETCH+DECODE stand-in (mapInPandas:
+  the per-URL payload materializes executor-side, as bytes arrive at a real
+  fetcher, then image decode + 64-bit pHash) → `loop._phash_dedup` →
+  `loop._next_frontier` (remaining frontier + canonicalized outlink edges).
 
-Payloads are synthesized deterministically per url_hash (the sandbox's
-stand-in for the network fetch: encode of a seeded tile) and NEVER shuffled
-— matching the production design where decoded stats, not payloads, move
-between stages. Same input at local[8] and local[32] (N vs 4N executors per
-the task brief) → urls/sec at both → efficiency. ``profile_scaling_stages``
-times each pipeline prefix separately so regressions are attributed to a
-stage, not asserted.
+Every robots row has crawl_delay_ms = 0, so each host's budget is
+``max_per_host`` (1<<30) and the batch is the whole unseen set. Payloads
+(encodes of a seeded tile per url_hash) are NEVER shuffled — decoded stats,
+not payloads, move between stages. Same input at local[8] and local[32] (N
+vs 4N executors) → urls/sec at both → efficiency. ``profile_scaling_stages``
+times each iteration prefix so regressions are attributed to a stage.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import time
 from collections.abc import Iterator
+from contextlib import closing
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nightcrawler_ds_pipeline_spark.codecs import decode_image, encode_image, phash64
+from nightcrawler_ds_pipeline_spark.crawl import politeness
+from nightcrawler_ds_pipeline_spark.crawl.loop import (
+    FRONTIER_COLS,
+    _next_frontier,
+    _phash_dedup,
+    _unpersist,
+)
 from nightcrawler_ds_pipeline_spark.crawl.seen import (
+    BLOOM_SCHEMA,
+    DEFAULT_NUM_PARTITIONS,
     build_bloom_partitions,
     filter_unseen,
 )
@@ -46,8 +55,13 @@ from nightcrawler_ds_pipeline_spark.functions.urls import with_canonical
 
 NUM_HOSTS = 5000
 _SIZES = [(32, 32), (48, 64), (64, 64)]
+# the iteration prefixes profile_scaling_stages times, in loop order
+PREFIXES = ("scan_frontier", "probe_antijoin", "dequeue", "fetch_decode", "next_frontier")
 
-FETCH_OUT_COLS = "url_hash long, host string, w int, h int, phash long, decode_ok boolean"
+FETCH_OUT_COLS = (
+    "url_hash long, host string, seq long, priority double, error boolean, "
+    "outlinks array<string>, w int, h int, phash long, decode_ok boolean"
+)
 
 
 def synth_frontier(spark: SparkSession, n_urls: int) -> DataFrame:
@@ -72,7 +86,9 @@ def synth_frontier(spark: SparkSession, n_urls: int) -> DataFrame:
 def _synth_fetch_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     """The fetch+decode stage: per-URL payload materializes here (network
     stand-in: deterministic encode of a seeded tile), then decode + phash.
-    ~0.9 ms/url of pure per-row CPU — the 1000-executor profile."""
+    ~0.9 ms/url of pure per-row CPU — the 1000-executor profile. Emits the
+    columns the dedup and frontier kernels read: every fetch succeeds and
+    each page has one synthetic outlink."""
     n = len(pdf)
     w = np.zeros(n, dtype="int32")
     h = np.zeros(n, dtype="int32")
@@ -99,15 +115,16 @@ def _synth_fetch_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         h[i], w[i] = dec.shape[0], dec.shape[1]
         ph[i] = phash64(dec)
         ok[i] = True
-    return pd.DataFrame(
-        {
-            "url_hash": pdf["url_hash"].values,
-            "host": pdf["host"].values,
-            "w": w,
-            "h": h,
-            "phash": ph,
-            "decode_ok": ok,
-        }
+    return pdf[["url_hash", "host", "seq", "priority"]].assign(
+        error=False,
+        outlinks=[
+            [f"https://{host}/next/{uh}?utm_source=crawl&x=1"]
+            for host, uh in zip(pdf["host"], hashes)
+        ],
+        w=w,
+        h=h,
+        phash=ph,
+        decode_ok=ok,
     )
 
 
@@ -150,22 +167,16 @@ def prepare_scaling_inputs(
     seen_fraction_mod: int = 10,
 ) -> str:
     """One-time, UNTIMED input materialization (the catalog-snapshot
-    analogue): frontier with canonical_url/url_hash/host precomputed (as
-    the production frontier table stores them), the ~30%% seen set, and
-    its Bloom sketch table — all parquet."""
-    import os
-    import shutil
-
-    from nightcrawler_ds_pipeline_spark.crawl.seen import BLOOM_SCHEMA
-
+    analogue), all parquet: the frontier with every loop frontier column
+    (plus ``id``, which picks the seen rows), the ~30%% seen set, its Bloom
+    sketch table, and one robots row per host with crawl_delay_ms = 0."""
     # fingerprint the materialized schemas into the marker: when a table's
     # schema evolves (e.g. the bloom rows gained num_partitions), stale
     # cached inputs must regenerate, not crash the probe with a missing
     # column mid-bench
-    from nightcrawler_ds_pipeline_spark.crawl.seen import DEFAULT_NUM_PARTITIONS
-
     fingerprint = (
-        f"v3 P={DEFAULT_NUM_PARTITIONS} bloom={BLOOM_SCHEMA.simpleString()}\n"
+        f"v4 P={DEFAULT_NUM_PARTITIONS} bloom={BLOOM_SCHEMA.simpleString()} "
+        f"frontier={','.join(FRONTIER_COLS)} robots\n"
     )
     marker = os.path.join(out_dir, "_COMPLETE")
     if os.path.exists(marker):
@@ -173,8 +184,13 @@ def prepare_scaling_inputs(
             if f.read() == fingerprint:
                 return out_dir
         shutil.rmtree(out_dir, ignore_errors=True)
-        os.makedirs(out_dir, exist_ok=True)
-    frontier = with_canonical(synth_frontier(spark, n_urls), "url")
+    os.makedirs(out_dir, exist_ok=True)
+    frontier = (
+        with_canonical(synth_frontier(spark, n_urls), "url")
+        .withColumn("discovered_iter", F.lit(0))
+        .withColumn("parent_url_hash", F.lit(None).cast("long"))
+        .select(*FRONTIER_COLS, "id")
+    )
     frontier.write.mode("overwrite").parquet(f"{out_dir}/frontier.parquet")
     frontier = spark.read.parquet(f"{out_dir}/frontier.parquet")
     seen = frontier.filter(F.col("id") % seen_fraction_mod < 3).select(
@@ -185,68 +201,75 @@ def prepare_scaling_inputs(
     build_bloom_partitions(seen).write.mode("overwrite").parquet(
         f"{out_dir}/bloom.parquet"
     )
+    frontier.select("host").distinct().select(
+        "host",
+        F.lit(0).alias("crawl_delay_ms"),
+        F.array().cast("array<string>").alias("disallow_prefixes"),
+    ).write.mode("overwrite").parquet(f"{out_dir}/robots.parquet")
     with open(marker, "w") as f:
         f.write(fingerprint)
     return out_dir
 
 
-def _batch_stage(spark: SparkSession, input_dir: str, max_per_host: int):
-    """probe → anti-join → salted dequeue, reading materialized inputs.
-    Projects down to (url_hash, host, priority) BEFORE the dequeue window
-    so the shuffle moves ~24 B/row, not the full frontier width."""
-    frontier = spark.read.parquet(f"{input_dir}/frontier.parquet")
-    seen = spark.read.parquet(f"{input_dir}/seen.parquet")
-    bloom = spark.read.parquet(f"{input_dir}/bloom.parquet")
-    candidates = filter_unseen(
-        frontier.select("url_hash", "host", "priority"), seen, bloom
-    )
-    # salted per-host top-K (politeness dequeue shape; budget unbounded so
-    # the batch is the full unseen set — steady-state max load)
-    w1 = Window.partitionBy("host", F.pmod(F.col("url_hash"), F.lit(8))).orderBy(
-        F.col("priority").desc(), F.col("url_hash").asc()
-    )
-    return (
-        candidates.withColumn("__r", F.row_number().over(w1))
-        .filter(F.col("__r") <= max_per_host)
-        .select("url_hash", "host")
-    )
+def _read_inputs(spark: SparkSession, n_urls: int, input_dir: str | None) -> dict:
+    """The materialized inputs, built on first use. ``input_dir`` defaults
+    to a per-size dir under the temp dir, reused across reps and
+    parallelism levels, so every level reads identical bytes."""
+    if input_dir is None:
+        input_dir = os.path.join(tempfile.gettempdir(), f"ncds_scaling_{n_urls}")
+    prepare_scaling_inputs(spark, n_urls, input_dir)
+    tables = ("frontier", "seen", "bloom", "robots")
+    return {t: spark.read.parquet(f"{input_dir}/{t}.parquet") for t in tables}
 
 
-def _fetched_stage(spark: SparkSession, batch):
+def _fetched_stage(batch: DataFrame) -> DataFrame:
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _synth_fetch_decode_batch(pdf)
 
-    # AQE coalesces the window output by BYTES (rows are ~16 B) and would
-    # run this CPU-bound UDF on a handful of tasks; spread it explicitly —
-    # 4× cores for load balance against per-partition variance.
-    par = spark.sparkContext.defaultParallelism * 4
-    return batch.repartition(par).mapInPandas(op, schema=FETCH_OUT_COLS)
+    # the numbered batch is ONE range partition up to SINGLE_WINDOW_MAX rows
+    # (AQE coalesces by bytes above it): spread this CPU-bound UDF
+    # explicitly, 4× cores for load balance against per-partition variance.
+    par = batch.sparkSession.sparkContext.defaultParallelism * 4
+    return (
+        batch.select("url_hash", "host", "seq", "priority")
+        .repartition(par)
+        .mapInPandas(op, schema=FETCH_OUT_COLS)
+    )
 
 
-def _full_job(spark: SparkSession, input_dir: str, max_per_host: int):
-    fetched = _fetched_stage(spark, _batch_stage(spark, input_dir, max_per_host))
-    # outlink-edge canonicalization: the per-iteration kernel that DOES run
-    # on fetch output (loop.py 5c) — one synthetic outlink per fetched row
-    out_url = F.concat(
-        F.lit("https://"),
-        F.col("host"),
-        F.lit("/next/"),
-        F.col("url_hash").cast("string"),
-        F.lit("?utm_source=crawl&x=1"),
-    )
-    edges = with_canonical(fetched.withColumn("url", out_url), "url")
-    # within-batch exact phash dedup + final one-pass aggregate
-    w_dup = Window.partitionBy("phash").orderBy(F.col("url_hash"))
-    out = edges.withColumn(
-        "is_dup", F.col("decode_ok") & (F.row_number().over(w_dup) > 1)
-    )
-    return out.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("decode_ok"), 1).otherwise(0)).alias("n_ok"),
-        F.sum(F.when(F.col("is_dup"), 1).otherwise(0)).alias("n_dup"),
-        F.count_distinct(F.col("url_hash")).alias("n_edges"),
-    )
+def _iteration(
+    inputs: dict[str, DataFrame], max_per_host: int
+) -> Iterator[tuple[str, DataFrame]]:
+    """One crawl iteration on the loop's kernels, yielded as (prefix, frame)
+    in PREFIXES order; each frame is built only when the caller advances.
+    The frames the loop caches are cached here too, and released when the
+    generator finishes or is closed."""
+    frontier, seen = inputs["frontier"].select(*FRONTIER_COLS), inputs["seen"]
+    cached: list[DataFrame] = []
+    try:
+        yield "scan_frontier", frontier
+        candidates = filter_unseen(frontier, seen, inputs["bloom"])
+        yield "probe_antijoin", candidates
+        # robots gate once: the dequeue and the remaining frontier read it
+        gated = politeness.robots_filter(candidates, inputs["robots"]).cache()
+        pre_batch = politeness.dequeue_gated(gated, max_per_host=max_per_host).cache()
+        cached += [gated, pre_batch]
+        batch = politeness.assign_global_seq(pre_batch, pre_batch.count()).cache()
+        cached.append(batch)
+        yield "dequeue", batch
+        # cached: the aggregate and the frontier derivation both read it
+        deduped = _phash_dedup(_fetched_stage(batch), None).cache()
+        cached.append(deduped)
+        yield "fetch_decode", deduped
+        new_seen = batch.select("url_hash")
+        yield "next_frontier", _next_frontier(gated, batch, deduped, new_seen, seen, 0)
+    finally:
+        _unpersist(*cached)
+
+
+def _noop(df: DataFrame) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def run_scaling_workload(
@@ -255,30 +278,26 @@ def run_scaling_workload(
     input_dir: str | None = None,
     max_per_host: int = 1 << 30,
 ) -> dict:
-    """One crawl mega-batch over the materialized inputs; throughput stats.
-
-    ``input_dir`` defaults to a per-size dir under /tmp; inputs are built
-    (untimed) on first use and reused across reps and parallelism levels —
-    identical bytes in, like the driver's identical parquet testdata."""
-    import tempfile, os
-
-    if input_dir is None:
-        input_dir = os.path.join(
-            tempfile.gettempdir(), f"ncds_scaling_{n_urls}"
-        )
-    os.makedirs(input_dir, exist_ok=True)
-    prepare_scaling_inputs(spark, n_urls, input_dir)
-
+    """One crawl mega-batch over the materialized inputs: the dedup
+    aggregate, then the next frontier into a noop sink; throughput stats."""
+    inputs = _read_inputs(spark, n_urls, input_dir)
     t0 = time.time()
-    agg = _full_job(spark, input_dir, max_per_host).collect()[0]
+    for prefix, df in _iteration(inputs, max_per_host):
+        if prefix == "fetch_decode":
+            agg = df.agg(
+                F.count("*").alias("batch"),
+                F.count_if("decode_ok").alias("decoded_ok"),
+                F.count_if("is_phash_dup").alias("phash_dups"),
+            ).collect()[0]
+        elif prefix == "next_frontier":
+            _noop(df)
     wall = time.time() - t0
+    out = {k: int(v) for k, v in agg.asDict().items()}
     return {
         "n_urls": n_urls,
-        "batch": int(agg["n"]),
-        "decoded_ok": int(agg["n_ok"]),
-        "phash_dups": int(agg["n_dup"]),
+        **out,
         "sec": round(wall, 2),
-        "urls_per_sec": round(int(agg["n"]) / wall, 1),
+        "urls_per_sec": round(out["batch"] / wall, 1),
     }
 
 
@@ -289,35 +308,16 @@ def profile_scaling_stages(
     max_per_host: int = 1 << 30,
 ) -> dict:
     """Per-stage wall times via cumulative-prefix materialization: each
-    entry is the wall of running the pipeline UP TO that stage, so
-    stage cost ≈ difference of adjacent prefixes (attribution, not
-    assertion — BASELINE.md uses this to locate the non-scaling part)."""
-    import tempfile, os
-
-    if input_dir is None:
-        input_dir = os.path.join(
-            tempfile.gettempdir(), f"ncds_scaling_{n_urls}"
-        )
-    os.makedirs(input_dir, exist_ok=True)
-    prepare_scaling_inputs(spark, n_urls, input_dir)
-
-    def _noop(df) -> float:
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 2)
-
-    frontier = spark.read.parquet(f"{input_dir}/frontier.parquet")
-    seen = spark.read.parquet(f"{input_dir}/seen.parquet")
-    bloom = spark.read.parquet(f"{input_dir}/bloom.parquet")
+    PREFIXES entry is the wall of running a fresh iteration UP TO and
+    including that stage, so stage cost ≈ difference of adjacent prefixes
+    (attribution, not assertion — BASELINE.md uses this to locate the
+    non-scaling part); ``full_job`` is one `run_scaling_workload` job."""
+    inputs = _read_inputs(spark, n_urls, input_dir)
     prof = {}
-    prof["scan_frontier"] = _noop(frontier.select("url_hash", "host", "priority"))
-    prof["probe_antijoin"] = _noop(
-        filter_unseen(frontier.select("url_hash", "host", "priority"), seen, bloom)
-    )
-    batch = _batch_stage(spark, input_dir, max_per_host)
-    prof["dequeue"] = _noop(batch)
-    prof["fetch_decode"] = _noop(_fetched_stage(spark, batch))
-    t0 = time.time()
-    _full_job(spark, input_dir, max_per_host).collect()
-    prof["full_job"] = round(time.time() - t0, 2)
+    for prefix in PREFIXES:
+        t0 = time.time()
+        with closing(_iteration(inputs, max_per_host)) as stages:
+            _noop(next(df for name, df in stages if name == prefix))
+        prof[prefix] = round(time.time() - t0, 2)
+    prof["full_job"] = run_scaling_workload(spark, n_urls, input_dir, max_per_host)["sec"]
     return prof

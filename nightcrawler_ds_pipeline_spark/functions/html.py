@@ -1,15 +1,14 @@
 """HTML payload decode — S7 (reference s04_zyte.py:148-155).
 
-base64-decode is JVM-side (`unbase64`); charset detection + decode with
+base64-decode is JVM-side (`F.unbase64`); charset detection + decode with
 replacement needs Python (charset_normalizer), so it runs as an
-Arrow-batched pandas UDF over the already-decoded binary column. Errors
+Arrow-batched pandas UDF (`decode_html_udf`) over the decoded binary column. Errors
 decode to '' (the reference logs and continues with html='', s04:115-119).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -38,9 +37,3 @@ def decode_html_bytes(data: bytes | None) -> str:
 @F.pandas_udf(T.StringType())
 def decode_html_udf(data: pd.Series) -> pd.Series:  # pragma: no cover - spark
     return data.map(decode_html_bytes)
-
-
-def html_from_base64_col(b64_col: Column | str) -> Column:
-    """Full S7 path: unbase64 (JVM) → charset decode (pandas UDF)."""
-    c = F.col(b64_col) if isinstance(b64_col, str) else b64_col
-    return decode_html_udf(F.unbase64(c))

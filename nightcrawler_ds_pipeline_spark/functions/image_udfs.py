@@ -1,7 +1,8 @@
 """Vectorized image UDFs (Arrow-batched; no per-row Python at the row level).
 
 Implements the BASELINE.json ``input_hint`` image operations: decode image
-``bytes`` → (w, h, phash, decode_ok), PSNR checks, hamming distance. Decode
+``bytes`` → (w, h, phash, decode_ok) and hamming distance (the PSNR gate is
+``codecs.psnr``). Decode
 runs inside ``mapInPandas`` so each Arrow batch is processed as one unit and
 wide binary columns never round-trip more than once. Corrupt payloads become
 error rows, never exceptions (reference analogue: error rows at
@@ -16,9 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from nightcrawler_ds_pipeline_spark.codecs import decode_image, phash64, psnr
+from nightcrawler_ds_pipeline_spark.codecs import decode_image, phash64
 
 DECODE_COLS = "w_decoded int, h_decoded int, phash_decoded long, decode_ok boolean"
 
@@ -73,38 +73,6 @@ def decode_images(
             yield _decode_batch(pdf, bytes_col)
 
     return df.mapInPandas(op, schema=out_schema)
-
-
-@F.pandas_udf(T.LongType())
-def phash_udf(data: pd.Series) -> pd.Series:  # pragma: no cover - spark
-    def one(b):
-        if b is None:
-            return None
-        try:
-            return phash64(decode_image(b))
-        except Exception:
-            return None
-
-    return data.map(one)
-
-
-@F.pandas_udf(T.DoubleType())
-def psnr_udf(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover - spark
-    """PSNR between two encoded image payloads (test/verification path)."""
-
-    def one(xa, xb):
-        if xa is None or xb is None:
-            return None
-        try:
-            pa, pb = decode_image(xa), decode_image(xb)
-        except ValueError:
-            return None
-        if pa.shape != pb.shape:
-            return 0.0
-        v = psnr(pa, pb)
-        return 1e9 if v == float("inf") else float(v)
-
-    return pd.Series([one(xa, xb) for xa, xb in zip(a, b)])
 
 
 def hamming64_col(a, b):

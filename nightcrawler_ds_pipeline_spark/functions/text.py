@@ -1,8 +1,9 @@
 """Scalar text/hash functions (SURVEY.md §2.7) — JVM-side where possible.
 
 Each mirrors a reference pure function (cited); builtin ``pyspark.sql.
-functions`` compositions keep them inside whole-stage codegen. Only the
-256-bit-modulus stable id needs a pandas UDF (no 256-bit arithmetic in SQL).
+functions`` compositions keep them inside whole-stage codegen. The
+256-bit-modulus stable id and the run uuid are plain Python (no 256-bit
+arithmetic in SQL).
 """
 
 from __future__ import annotations
@@ -10,10 +11,8 @@ from __future__ import annotations
 import hashlib
 import uuid as _uuid
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _c(col: Column | str) -> Column:
@@ -33,14 +32,6 @@ def clean_short_text_col(col: Column | str) -> Column:
     return F.regexp_replace(c, r" +", " ")
 
 
-def count_tokens_col(col: Column | str) -> Column:
-    """Whitespace token count. Reference: helpers/utils.py:175-179."""
-    t = F.trim(_c(col))
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, r"\s+"))
-    )
-
-
 def checksum_uid_col(url: Column | str, title: Column | str) -> Column:
     """Result uid = sha256 of '<url before ?>_<title>'.
 
@@ -51,14 +42,6 @@ def checksum_uid_col(url: Column | str, title: Column | str) -> Column:
     base = F.concat_ws("_", F.split_part(_c(url), F.lit("?"), F.lit(1)),
                        F.coalesce(_c(title), F.lit("")))
     return F.sha2(base, 256)
-
-
-def params_cache_key_col(*cols: Column | str) -> Column:
-    """sha256(to_json(struct(...))) — the request-memo key.
-
-    Reference analogue: helpers/api/api_caller.py:48-51 (sha256(str(params))).
-    """
-    return F.sha2(F.to_json(F.struct(*[_c(c) for c in cols])), 256)
 
 
 def stable_hash_id(text: str) -> int:
@@ -75,11 +58,6 @@ def run_uuid(*args) -> str:
     concatenated = "".join(str(a) for a in args)
     digest = hashlib.sha1(concatenated.encode("utf-8")).hexdigest()
     return str(_uuid.UUID(digest[:32]))
-
-
-@F.pandas_udf(T.LongType())
-def stable_hash_id_udf(texts: pd.Series) -> pd.Series:  # pragma: no cover - spark
-    return texts.map(lambda t: stable_hash_id(t) if t is not None else None)
 
 
 def price_concat_col(price: Column | str, currency: Column | str) -> Column:

@@ -1,17 +1,15 @@
-"""JSON-output parity writer.
+"""JSON-output parity.
 
 The reference's ``to_dict`` drops fields equal to None, -1, or ''
 (``ObjectUtilitiesContainer``, base.py:34-48) — nulls are ELIDED from the
-serialized checkpoints, not written. This writer reproduces that so a JSON
-dump of engine results is byte-comparable with reference checkpoints.
+serialized checkpoints, not written. ``elide_nullish`` reproduces that so a
+JSON dump of engine result rows is byte-comparable with reference
+checkpoints.
 """
 
 from __future__ import annotations
 
-import json
 from typing import Any
-
-from pyspark.sql import DataFrame
 
 _ELIDED = (None, -1, -1.0, "")
 
@@ -29,11 +27,3 @@ def elide_nullish(d: dict[str, Any]) -> dict[str, Any]:
             continue
         out[k] = v
     return out
-
-
-def rows_to_reference_json(df: DataFrame, sort_keys: bool = True) -> list[str]:
-    """Collect a (small) result DataFrame to reference-parity JSON lines."""
-    return [
-        json.dumps(elide_nullish(r.asDict(recursive=True)), sort_keys=sort_keys)
-        for r in df.collect()
-    ]

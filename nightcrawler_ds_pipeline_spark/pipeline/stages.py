@@ -225,12 +225,14 @@ def run_stages(
     (base.py:323-327) for all but the last entry, the sink. A stage that
     returns its input keeps the previous count (if any) and starts no job. A
     ``catalog`` checkpoints each stage as ``stage_<name>`` (base.py:285-309)
-    and the walk counts and continues from the re-read snapshot."""
+    and the walk counts and continues from the re-read snapshot; a ``None``
+    entry writes no checkpoint (``runner.run_from`` re-enters after it from
+    the nearest earlier one)."""
     n = None
     for i, (name, fn) in enumerate(stages):
         out = df if fn is None else fn(df, cfg)
         changed = out is not df or n is None
-        if catalog is not None:
+        if catalog is not None and fn is not None:
             catalog.write(out, f"stage_{name}", mode="overwrite", meta={"stage": name})
             out = catalog.read(out.sparkSession, f"stage_{name}")
         if i < len(stages) - 1:

@@ -7,7 +7,7 @@ payload bytes cross the Arrow boundary once and the output schema excludes
 them) → optional stream-static equi-join against a HISTORY phash table
 (static small side, re-looked-up per micro-batch) → per-phash
 ``applyInPandasWithState`` that flags ``is_phash_dup`` with exactly the
-batch loop's ``_phash_dedup`` semantics (crawl/loop.py:136): a row is a
+batch loop's ``_phash_dedup`` semantics (crawl/loop.py): a row is a
 dup iff its decoded phash is in history, was seen in an earlier
 micro-batch, or appears earlier (by image_id order) in the same
 micro-batch.

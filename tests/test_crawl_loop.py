@@ -143,3 +143,27 @@ def test_perfbench_loop_actions_name_lines_of_the_loop():
             for text in src[node.lineno - 1 : node.end_lineno]
         ]
         assert line in body, f"{line!r} is not a line of loop.{fn}"
+
+
+def test_phash_dedup_decodes_each_image_once(spark, t1_dir):
+    """_phash_dedup is one pass over the fetched batch: its plan has exactly
+    the Python eval nodes of its input (the decode), so the fetch+decode
+    subtree runs once. A split into decoded/failed rows plus a union doubles
+    them and decodes every image twice."""
+    from nightcrawler_ds_pipeline_spark.crawl import politeness
+    from nightcrawler_ds_pipeline_spark.crawl.fetch import fetch_batch
+    from nightcrawler_ds_pipeline_spark.crawl.loop import _phash_dedup, seed_frontier
+    from tests.test_plan_shapes import plan_shape
+
+    frontier = seed_frontier(spark.read.parquet(f"{t1_dir}/serp_results.parquet"))
+    batch = politeness.assign_global_seq(frontier, frontier.count())
+    fetched = fetch_batch(
+        batch,
+        spark.read.parquet(f"{t1_dir}/fetch_responses.parquet"),
+        spark.read.parquet(f"{t1_dir}/images.parquet"),
+    )
+    hist = spark.createDataFrame([(1,)], "phash long")
+    python_nodes = plan_shape(fetched)[2]
+    assert python_nodes > 0
+    assert plan_shape(_phash_dedup(fetched, hist))[2] == python_nodes
+    assert plan_shape(_phash_dedup(fetched, None))[2] == python_nodes
