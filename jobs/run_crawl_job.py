@@ -9,9 +9,12 @@ Local sandbox:
         --catalog /tmp/crawl_state --iterations 3
 
 Cluster: same invocation with --master spark://... / yarn / k8s; the state
-catalog root moves to a shared filesystem. Resume is automatic: re-running
-with the same --catalog continues after the last lineage-committed
-iteration. Every flag's default is the matching ``CrawlConfig`` field.
+catalog root moves to a shared filesystem. Run one writer process per
+catalog root: the catalog's commit lock is in-process only. Resume is
+automatic: re-running with the same --catalog continues after the last
+lineage-committed iteration. Superseded state is reclaimed after each
+commit, so the catalog holds one copy of each overwrite table. Every
+flag's default is the matching ``CrawlConfig`` field.
 """
 
 from __future__ import annotations

@@ -14,6 +14,9 @@ Each iteration is one batch job:
   6. append per-partition lineage rows LAST — the lineage commit finalizes
      the iteration; resume replays from the last finalized iteration and
      ignores any newer uncommitted snapshots (exact resume).
+  7. expire the snapshots that this iteration's overwrites superseded
+     (`SnapshotCatalog.expire_snapshots`), so overwrite tables keep one
+     snapshot on disk however long the crawl runs.
 
 An iteration whose gated frontier is non-empty but dequeues nothing (every
 host out of tokens) skips steps 3-4 and commits through the same block: the
@@ -489,6 +492,12 @@ def run_crawl(
         if cfg.compact_every and (it + 1) % cfg.compact_every == 0:
             catalog.compact(spark, "seen")
             catalog.compact(spark, "results")
+        # retention: expire what this iteration's overwrites and compactions
+        # superseded; resume starts at the newest lineage, so it never needs
+        # them. A table this iteration left alone costs one manifest read
+        # and loses only what a crash inside an earlier expiry left behind.
+        for table in (sk.table, "robots", "politeness", "frontier", "seen", "results"):
+            catalog.expire_snapshots(table)
 
         seen_count += n_batch
         summary.append({"iter": it, **counts})

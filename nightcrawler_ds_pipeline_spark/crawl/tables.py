@@ -10,11 +10,17 @@ checkpoints; reference analogue: the per-stage JSON checkpoints at
 base.py:285-309 and file resume at helpers/utils_io.py:20-51).
 
 On a real cluster this layer is Apache Iceberg (append / overwrite
-snapshots, metadata-level partition pruning); ``SnapshotCatalog`` provides
-the same commit semantics on plain parquet. Every snapshot carries a
-``meta`` dict — the crawl loop tags snapshots with their iteration id and
-readers filter ``meta["iter"] <= committed``, which is how un-finalized
-iterations are rolled back for free.
+snapshots); ``SnapshotCatalog`` provides the same commit semantics on plain
+parquet. Every snapshot carries a ``meta`` dict — the crawl loop tags
+snapshots with their iteration id and readers filter ``meta["iter"] <=
+committed``, which is how un-finalized iterations are rolled back for free.
+
+One lifecycle rule: a read sees only the live set (the last overwrite and
+the appends after it), and once an iteration's lineage commits, the crawl
+loop expires every snapshot that an overwrite of that iteration superseded.
+Resume only ever starts at the newest lineage, so nothing it could roll
+back to is expired. There is no time travel: an expired snapshot is gone
+from the manifest and the disk.
 
 Each entry also records its ``schema`` string; a scan merges parquet
 footers (``mergeSchema``: additive evolution, old rows read NULL for a new
@@ -70,16 +76,13 @@ class SnapshotCatalog:
             json.dump(snapshots, f, indent=1)
         os.replace(tmp, path)  # atomic commit point
 
-    def _snaps(
-        self, table: str, max_iter: int | None = None, as_of: int | None = None
-    ) -> list[dict]:
+    def _snaps(self, table: str, max_iter: int | None = None) -> list[dict]:
         """Committed entries in commit order, with ``meta.iter <= max_iter``
-        (no ``iter`` counts as -1) and ``id <= as_of`` when given."""
+        when given (no ``iter`` counts as -1)."""
         return [
             s
             for s in self._load_manifest(table)
-            if (max_iter is None or s["meta"].get("iter", -1) <= max_iter)
-            and (as_of is None or s["id"] <= as_of)
+            if max_iter is None or s["meta"].get("iter", -1) <= max_iter
         ]
 
     # -- public API ---------------------------------------------------------
@@ -89,17 +92,8 @@ class SnapshotCatalog:
         table: str,
         mode: str = "append",
         meta: dict | None = None,
-        partition_by: list[str] | None = None,
-        stats_cols: list[str] | None = None,
     ) -> int:
-        """Stage parquet for ``df`` then atomically commit a snapshot.
-
-        ``stats_cols`` opts the snapshot into manifest-level column stats
-        (the Iceberg manifest min/max analogue): after the write, per-column
-        global min/max are harvested from the already-written parquet
-        FOOTERS (pyarrow metadata only — no data scan, no extra Spark job)
-        and stored in the manifest entry, enabling snapshot-level pruning in
-        ``read(prune=...)``."""
+        """Stage parquet for ``df`` then atomically commit a snapshot."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"bad mode {mode!r}")
         tdir = self._table_dir(table)
@@ -108,17 +102,10 @@ class SnapshotCatalog:
             snapshots = self._load_manifest(table)
             snap_id = (snapshots[-1]["id"] + 1) if snapshots else 0
             data_dir = os.path.join(tdir, f"snap-{snap_id:06d}-{uuid.uuid4().hex[:8]}")
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(data_dir)
-            entry = {"id": snap_id, "dir": data_dir, "mode": mode,
-                     "meta": meta or {}, "schema": df.schema.simpleString()}
-            if stats_cols:
-                stats = _footer_stats(data_dir, stats_cols)
-                if stats:
-                    entry["stats"] = stats
-            snapshots.append(entry)
+            df.write.mode("overwrite").parquet(data_dir)
+            snapshots.append({"id": snap_id, "dir": data_dir, "mode": mode,
+                              "meta": meta or {},
+                              "schema": df.schema.simpleString()})
             self._commit_manifest(table, snapshots)
         return snap_id
 
@@ -152,31 +139,12 @@ class SnapshotCatalog:
         spark: SparkSession,
         table: str,
         max_iter: int | None = None,
-        as_of: int | None = None,
-        prune: tuple | None = None,
     ) -> DataFrame | None:
         """Union of live snapshots: everything since the last overwrite,
         optionally restricted to snapshots with ``meta['iter'] <= max_iter``
         (exact-resume rollback of un-finalized iterations). None when no
-        snapshot is visible.
-
-        ``as_of`` is snapshot-id time travel (Iceberg ``VERSION AS OF``):
-        the live set is computed as if no snapshot with ``id > as_of`` had
-        ever been committed — an overwrite or compaction after that point
-        is invisible.
-
-        ``prune=(col, lo, hi)`` is manifest-level scan pruning (the Iceberg
-        metadata-pruning analogue): live snapshots whose stored footer
-        min/max for ``col`` (see ``write(stats_cols=...)``) provably miss
-        the ``[lo, hi]`` window (either bound may be None = unbounded) are
-        dropped WITHOUT opening their files. Snapshots without stats for
-        ``col`` are conservatively kept. Returns None when every live
-        snapshot prunes away."""
-        live = _live(self._snaps(table, max_iter, as_of))
-        if prune is not None:
-            col, lo, hi = prune
-            live = [s for s in live if _stats_may_match(s, col, lo, hi)]
-        return _scan(spark, live)
+        snapshot is visible."""
+        return _scan(spark, _live(self._snaps(table, max_iter)))
 
     def read_incremental(
         self,
@@ -205,7 +173,12 @@ class SnapshotCatalog:
         table that EXISTS but has no committed snapshot (crash before the
         first finalizer, or a resume rollback) caps the window at -1 — an
         unbounded window there would ingest exactly the orphan appends
-        ``rollback_above`` is about to delete."""
+        ``rollback_above`` is about to delete.
+
+        The plan holds data-dir paths, not a manifest: in a crawl with
+        ``compact_every``, consume a held plan before the next compaction,
+        because the loop's retention then deletes the appends that the
+        compaction replaced."""
         if until_iter is None and os.path.isdir(self._table_dir("lineage")):
             until_iter = self.latest_iter("lineage")
         window = [
@@ -237,32 +210,22 @@ class SnapshotCatalog:
                 if len(keep) != len(self._load_manifest(table)):
                     self._commit_manifest(table, keep)
 
-    def expire_snapshots(self, table: str, keep_from_id: int | None = None) -> int:
+    def expire_snapshots(self, table: str) -> int:
         """Drop snapshots superseded by a later overwrite (the Iceberg
         ``expire_snapshots`` analogue): manifest entries that no current
         read path can reach — every snapshot before the last overwrite —
-        are removed and their data dirs deleted. ``keep_from_id`` retains
-        superseded snapshots with ``id >= keep_from_id`` so time travel
-        (``read(as_of=...)``) keeps working back to that point; the default
-        expires all of them, trading time travel below the overwrite (and
-        a ``rollback_above`` below a ``compact``) for reclaimed disk. Live
-        snapshots are never touched. Returns the number expired.
+        are removed and their data dirs deleted. Live snapshots are never
+        touched. Returns the number expired.
 
         A later ``rollback_above`` below the overwrite's iteration cannot
         re-expose expired snapshots — run expiration only on lineage-
-        committed history (the crawl loop's finalized iterations)."""
+        committed history (the crawl loop does so after each commit)."""
         with self._lock(table):
             snaps = self._snaps(table)
-            live_ids = {s["id"] for s in _live(snaps)}
-            dead = [
-                s
-                for s in snaps
-                if s["id"] not in live_ids
-                and (keep_from_id is None or s["id"] < keep_from_id)
-            ]
+            kept = _live(snaps)
+            dead = snaps[: len(snaps) - len(kept)]
             if not dead:
                 return 0
-            kept = [s for s in snaps if s not in dead]
             # streaming sinks (streaming/catalog_sink.py) skip replayed
             # micro-batches by max(meta.stream_batch_id) over the manifest:
             # carry an expired maximum onto the newest survivor (live
@@ -315,10 +278,11 @@ class SnapshotCatalog:
         snapshot per iteration — at 10^10 scale thousands of small files
         per table — so periodic compaction keeps the scan-side file count
         bounded. The compacted snapshot carries the max iter seen, so
-        exact resume at or above that iteration is unaffected; resuming
-        BELOW it still works because the superseded snapshots stay in the
-        manifest (``rollback_above`` drops the compaction and re-exposes
-        them) until ``expire_snapshots`` reclaims them.
+        exact resume at or above that iteration is unaffected. Until
+        ``expire_snapshots`` reclaims the superseded snapshots, a
+        ``rollback_above`` below it drops the compaction and re-exposes
+        them; the crawl loop expires them right after compacting, since
+        its resume never goes below a committed iteration.
 
         Returns the new snapshot id, or None if there is nothing to do.
         """
@@ -359,54 +323,3 @@ def _scan(spark: SparkSession, snaps: list[dict]) -> DataFrame | None:
 def _stream_batch_max(snaps: list[dict]) -> int:
     return max((s["meta"].get("stream_batch_id", -1) for s in snaps), default=-1)
 
-
-def _footer_stats(data_dir: str, cols: list[str]) -> dict:
-    """Global min/max per requested column, harvested from parquet footer
-    row-group statistics (pyarrow metadata — never reads data pages).
-    Columns with any stat-less row group, or with non-JSON-scalar stat
-    values (e.g. timestamps, binary), are omitted — pruning treats a
-    missing column as "may match" so omission is always safe."""
-    import pyarrow.parquet as pq
-
-    mins: dict = {}
-    maxs: dict = {}
-    bad: set = set()
-    wanted = set(cols)
-    for root_, _dirs, files in os.walk(data_dir):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(root_, fn)).metadata
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                for ci in range(row.num_columns):
-                    col = row.column(ci)
-                    name = col.path_in_schema
-                    if name not in wanted or name in bad:
-                        continue
-                    st = col.statistics
-                    if (
-                        st is None
-                        or not st.has_min_max
-                        or not isinstance(st.min, (bool, int, float, str))
-                        or not isinstance(st.max, (bool, int, float, str))
-                    ):
-                        bad.add(name)
-                        continue
-                    mins[name] = st.min if name not in mins else min(mins[name], st.min)
-                    maxs[name] = st.max if name not in maxs else max(maxs[name], st.max)
-    return {c: [mins[c], maxs[c]] for c in mins if c not in bad and c in maxs}
-
-
-def _stats_may_match(snap: dict, col: str, lo, hi) -> bool:
-    """Conservative overlap test of a snapshot's stored [min, max] for
-    ``col`` against the [lo, hi] window; no stats → may match."""
-    st = (snap.get("stats") or {}).get(col)
-    if not st:
-        return True
-    mn, mx = st
-    if lo is not None and mx is not None and mx < lo:
-        return False
-    if hi is not None and mn is not None and mn > hi:
-        return False
-    return True

@@ -1,13 +1,13 @@
-"""Iceberg-analogue catalog features: time travel (read as_of), snapshot
-expiration, orphan-dir removal, manifest-level min/max pruning, and the
-per-table commit lock.
+"""Iceberg-analogue catalog features: snapshot expiration, orphan-dir
+removal and the per-table commit lock. There is no time travel and no
+manifest-level pruning: a read sees the live set, and the crawl loop
+expires what an overwrite supersedes once its lineage commits.
 
 These are metadata-layer semantics on SnapshotCatalog (crawl/tables.py) —
 the parquet stand-in for the real Iceberg runtime (reference analogue: the
 per-stage checkpoint history at base.py:285-309).
 """
 
-import json
 import os
 from concurrent.futures import ThreadPoolExecutor
 
@@ -23,26 +23,6 @@ def _df(spark, lo, hi, tag):
 @pytest.fixture()
 def cat(tmp_path):
     return SnapshotCatalog(str(tmp_path / "cat"))
-
-
-def test_read_as_of_time_travel(spark, cat):
-    s0 = cat.write(_df(spark, 0, 10, "a"), "t", mode="append")
-    s1 = cat.write(_df(spark, 10, 20, "b"), "t", mode="append")
-    s2 = cat.write(_df(spark, 100, 105, "c"), "t", mode="overwrite")
-    assert (s0, s1, s2) == (0, 1, 2)
-
-    # current view: overwrite wins
-    assert cat.read(spark, "t").count() == 5
-    # as_of the first append: only its rows
-    assert sorted(r["id"] for r in cat.read(spark, "t", as_of=s0).collect()) == list(
-        range(10)
-    )
-    # as_of the second append: union of both appends, overwrite invisible
-    assert cat.read(spark, "t", as_of=s1).count() == 20
-    # as_of the overwrite == current
-    assert cat.read(spark, "t", as_of=s2).count() == 5
-    # before any snapshot
-    assert cat.read(spark, "t", as_of=-1) is None
 
 
 def test_expire_snapshots_drops_superseded_only(spark, cat):
@@ -65,16 +45,6 @@ def test_expire_snapshots_drops_superseded_only(spark, cat):
     assert cat.expire_snapshots("t") == 0
 
 
-def test_expire_snapshots_keep_from_id_preserves_time_travel(spark, cat):
-    cat.write(_df(spark, 0, 10, "a"), "t", mode="append")
-    s1 = cat.write(_df(spark, 10, 20, "b"), "t", mode="append")
-    cat.write(_df(spark, 100, 105, "c"), "t", mode="overwrite")
-
-    assert cat.expire_snapshots("t", keep_from_id=s1) == 1  # only snap 0
-    # time travel to the kept superseded snapshot still works
-    assert cat.read(spark, "t", as_of=s1).count() == 10
-
-
 def test_remove_orphans_sweeps_rollback_leftovers(spark, cat):
     cat.write(_df(spark, 0, 10, "a"), "t", mode="append", meta={"iter": 0})
     s1 = cat.write(_df(spark, 10, 20, "b"), "t", mode="append", meta={"iter": 1})
@@ -90,55 +60,6 @@ def test_remove_orphans_sweeps_rollback_leftovers(spark, cat):
     assert not os.path.exists(orphan_dir)
     assert cat.read(spark, "t").count() == 10
     assert cat.remove_orphans("t", grace_s=0) == 0
-
-
-def test_manifest_stats_pruning(spark, cat):
-    # two appends with disjoint id ranges, footer stats harvested on write
-    cat.write(_df(spark, 0, 100, "a"), "t", mode="append", stats_cols=["id", "tag"])
-    cat.write(_df(spark, 1000, 1100, "b"), "t", mode="append", stats_cols=["id", "tag"])
-
-    # manifest carries JSON-scalar min/max (check straight off disk)
-    with open(os.path.join(cat.root, "t", "_snapshots.json")) as f:
-        manifest = json.load(f)
-    assert manifest[0]["stats"]["id"] == [0, 99]
-    assert manifest[1]["stats"]["id"] == [1000, 1099]
-    assert manifest[0]["stats"]["tag"] == ["a", "a"]
-
-    # window inside snapshot 2 only → snapshot 1 pruned without being read
-    hit = cat.read(spark, "t", prune=("id", 1050, None))
-    assert hit.inputFiles() and all("snap-000001" in p for p in hit.inputFiles())
-    assert hit.count() == 100  # pruning is snapshot-granular, filter still needed
-    # window spanning both → no pruning
-    assert cat.read(spark, "t", prune=("id", 50, 1050)).count() == 200
-    # string-column pruning
-    assert cat.read(spark, "t", prune=("tag", "b", "b")).count() == 100
-    # nothing can match → None
-    assert cat.read(spark, "t", prune=("id", 5000, None)) is None
-
-
-def test_stats_pruning_conservative_without_stats(spark, cat):
-    # snapshot written WITHOUT stats is always kept by prune
-    cat.write(_df(spark, 0, 10, "a"), "t", mode="append")
-    cat.write(_df(spark, 1000, 1010, "b"), "t", mode="append", stats_cols=["id"])
-    assert cat.read(spark, "t", prune=("id", 5000, None)).count() == 10
-
-
-def test_stats_cols_with_partition_by_degrades_safely(spark, cat):
-    # a partitionBy column lives in directory names, not parquet footers:
-    # its stats must be OMITTED (not fabricated) and pruning on it must
-    # conservatively keep the snapshot; a real data column still prunes
-    cat.write(
-        _df(spark, 0, 100, "a"),
-        "t",
-        mode="append",
-        partition_by=["tag"],
-        stats_cols=["id", "tag"],
-    )
-    snap = cat.snapshots("t")[0]
-    assert "tag" not in snap.get("stats", {})
-    assert snap["stats"]["id"] == [0, 99]
-    assert cat.read(spark, "t", prune=("tag", "zzz", None)).count() == 100
-    assert cat.read(spark, "t", prune=("id", 5000, None)) is None
 
 
 def test_concurrent_appends_to_one_table_all_commit(spark, cat):

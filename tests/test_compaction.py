@@ -1,13 +1,13 @@
-"""Snapshot compaction: live state identical, snapshot count bounded,
-resume and time travel preserved (``expire_snapshots`` afterwards trades
-the latter for disk)."""
+"""Snapshot compaction: live state identical, snapshot count bounded, and
+resume preserved; ``expire_snapshots`` afterwards reclaims the superseded
+snapshots, which the crawl loop does after each commit."""
 
 import os
 
 import pyspark.sql.functions as F
 
 from nightcrawler_ds_pipeline_spark.crawl.loop import CrawlConfig, run_crawl
-from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog
+from nightcrawler_ds_pipeline_spark.crawl.tables import SnapshotCatalog, _live
 
 
 def _mk(spark, lo, hi, it):
@@ -64,7 +64,8 @@ def test_compact_time_travel_and_expire(spark, tmp_path):
 
 def test_loop_with_compaction_matches_plain_run(spark, t1_dir, tmp_path):
     cfg_plain = CrawlConfig(iterations=3)
-    cfg_comp = CrawlConfig(iterations=3, compact_every=1)
+    cfg_comp = CrawlConfig(iterations=3, compact_every=1,
+                           robots_max_age_iters=1, bloom_min_seen=0)
     cat_a = SnapshotCatalog(str(tmp_path / "a"))
     cat_b = SnapshotCatalog(str(tmp_path / "b"))
     run_crawl(spark, cat_a, t1_dir, cfg_plain)
@@ -82,6 +83,13 @@ def test_loop_with_compaction_matches_plain_run(spark, t1_dir, tmp_path):
         for table in sorted(os.listdir(cat.root)):
             schemas = {s.get("schema") for s in cat.snapshots(table)}
             assert len(schemas) == 1 and None not in schemas, (table, schemas)
+    # retention: every table of the compacting run (the bloom and robots
+    # overwrite tables included) holds only its live set, on disk too
+    assert {"bloom", "robots"} <= set(os.listdir(cat_b.root))
+    for table in sorted(os.listdir(cat_b.root)):
+        snaps = cat_b.snapshots(table)
+        assert _live(snaps) == snaps, (table, [s["id"] for s in snaps])
+        assert cat_b.remove_orphans(table, grace_s=0) == 0, table
 
 
 def test_incremental_reader_stable_across_compact(spark, t1_dir, tmp_path):

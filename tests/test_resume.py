@@ -80,11 +80,31 @@ class _Crash(RuntimeError):
     pass
 
 
+class RecordingCatalog(SnapshotCatalog):
+    """Logs every committed write as ``(table, meta.iter)`` in ``writes``.
+    The manifest is no write log: retention drops superseded entries."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.writes = []
+
+    def write(self, df, table, mode="append", meta=None):
+        out = super().write(df, table, mode, meta)
+        self.writes.append((table, (meta or {}).get("iter")))
+        return out
+
+    def iter_writes(self, it):
+        """The tables written with ``meta.iter == it``."""
+        return {t for t, i in self.writes if i == it}
+
+
 class _CrashingCatalog(SnapshotCatalog):
     """Raises in ``table``'s write at iteration ``at_iter``, at ``point``:
     "before" the write (nothing lands), "staged" between the parquet
     staging and the manifest commit (an unreferenced data dir lands) or
-    "committed" after the commit (an orphan snapshot lands)."""
+    "committed" after the commit (an orphan snapshot lands). At "expire"
+    it raises when the loop expires ``table`` after ``at_iter``'s lineage
+    commit (superseded snapshots stay behind)."""
 
     def __init__(self, root, table, at_iter, point):
         super().__init__(root)
@@ -93,11 +113,11 @@ class _CrashingCatalog(SnapshotCatalog):
     def _hit(self, table, meta):
         return table == self.table and meta.get("iter") == self.at_iter
 
-    def write(self, df, table, mode="append", meta=None, *args, **kwargs):
+    def write(self, df, table, mode="append", meta=None):
         hit = self._hit(table, meta or {})
         if hit and self.point == "before":
             raise _Crash(table)
-        out = super().write(df, table, mode, meta, *args, **kwargs)
+        out = super().write(df, table, mode, meta)
         if hit and self.point == "committed":
             raise _Crash(table)
         return out
@@ -107,32 +127,44 @@ class _CrashingCatalog(SnapshotCatalog):
             raise _Crash(table)
         super()._commit_manifest(table, snapshots)
 
+    def expire_snapshots(self, table):
+        if self.point == "expire" and self._hit(table, {"iter": self.latest_iter("lineage")}):
+            raise _Crash(table)
+        return super().expire_snapshots(table)
+
 
 @pytest.mark.parametrize(
     "table,point",
     [("politeness", "committed"), ("results", "committed"),
-     ("lineage", "before"), ("seen", "staged")],
-    ids=["politeness", "results", "lineage", "seen"],
+     ("lineage", "before"), ("seen", "staged"), ("politeness", "expire")],
+    ids=["politeness", "results", "lineage", "seen", "retention"],
 )
 def test_resume_after_crash_inside_commit_block(
     spark, t1_dir, tmp_path, golden, table, point
 ):
     """A crash at an early pool write, a late pool write, the staging gap
     of the seen write or the lineage commit of iteration 1 leaves iteration
-    0 as the commit point; resuming with a plain catalog equals the
-    uninterrupted run."""
+    0 as the commit point; a crash in the retention after iteration 1's
+    commit leaves iteration 1. Resuming with a plain catalog equals the
+    uninterrupted run, and its retention sweeps what the crash left."""
     cfg = CrawlConfig(iterations=3, **T1_CFG)
     root = str(tmp_path / "crash")
     crashing = _CrashingCatalog(root, table, 1, point)
     with pytest.raises(_Crash):
         run_crawl(spark, crashing, t1_dir, cfg)
-    assert crashing.latest_iter("lineage") == 0
-    # only a crash after the commit leaves an orphan snapshot in the manifest
-    assert crashing.latest_iter(table) == (1 if point == "committed" else 0)
+    committed = 1 if point == "expire" else 0
+    assert crashing.latest_iter("lineage") == committed
+    # a crash before the write's manifest commit leaves no iteration-1 entry
+    assert crashing.latest_iter(table) == (0 if point in ("before", "staged") else 1)
+    if point == "expire":
+        # iteration 0's bucket state, superseded but not yet expired
+        assert len(crashing.snapshots(table)) == 2
 
     out = run_crawl(spark, SnapshotCatalog(root), t1_dir, cfg)
-    assert out["start_iter"] == 1
+    assert out["start_iter"] == committed + 1
     assert _final_state(spark, SnapshotCatalog(root)) == golden
+    for overwritten in ("frontier", "politeness"):
+        assert len(SnapshotCatalog(root).snapshots(overwritten)) == 1, overwritten
     if point == "staged":
         # the staged dir no manifest ever referenced is the one orphan
         assert SnapshotCatalog(root).remove_orphans(table, grace_s=0) == 1
